@@ -24,7 +24,9 @@ the offset, the sink's applied-batch-id manifest de-duplicates replays, and
 micro-batch cadence comes from the trigger (``--max-polls 0`` → one
 availableNow catch-up then exit; otherwise a continuous processingTime
 trigger of ``--poll-seconds``).  Same exactly-once contract, zero custom
-poll-loop code on the driver.
+poll-loop code on the driver.  ``--max-versions-per-batch`` caps the
+processingTime micro-batches only; with ``--max-polls 0`` it is rejected,
+because an availableNow trigger runs one unbounded micro-batch.
 """
 
 from __future__ import annotations
@@ -52,11 +54,23 @@ def main() -> None:
                         "streaming = declarative lake_changes -> lake sink "
                         "pipeline on Spark's own checkpoint")
     parser.add_argument("--max-versions-per-batch", type=int, default=0,
-                        help="streaming mode: source admission control — "
-                        "bound each steady-state micro-batch to N lake "
-                        "versions (0 = uncapped; the first batch after a "
-                        "restart is always uncapped, see lake_source.py)")
+                        help="streaming mode with --max-polls > 0: source "
+                        "admission control — bound each steady-state "
+                        "micro-batch to N lake versions (0 = uncapped; the "
+                        "first batch after a restart is always uncapped, "
+                        "see lake_source.py)")
     args = parser.parse_args()
+    if args.max_versions_per_batch and (
+        args.mode != "streaming" or args.max_polls == 0
+    ):
+        # availableNow runs one micro-batch over the whole catch-up: the
+        # Python data source API has no availableNow hook to honour the cap
+        parser.error(
+            "--max-versions-per-batch only bounds the processingTime "
+            "micro-batches of --mode streaming with --max-polls > 0; the "
+            "follower mode never reads it, and the --max-polls 0 catch-up "
+            "runs trigger(availableNow=True), which ignores it"
+        )
 
     from pyspark.sql import SparkSession
 

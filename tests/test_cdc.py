@@ -297,3 +297,33 @@ def test_replay_rejects_nonpositive_batch_lsns(spark, tmp_path, stream):
         replay(lake, stream, batch_lsns=0)
     with pytest.raises(ValueError, match="batch_lsns"):
         replay(lake, stream, batch_lsns=-5)
+
+
+def test_replay_negative_lsns_use_floor_slices(spark, tmp_path):
+    """Slice k covers [k*b, (k+1)*b), so a negative lsn belongs to the
+    slice floor(lsn / b).  Keyed with Spark's truncating ``DIV`` instead,
+    lsn -15 lands in slice -1, whose filter [-10, 0) misses it, and the
+    event is silently dropped."""
+    import datetime
+
+    t0 = datetime.datetime(2026, 1, 1)
+    rows = [
+        (lsn, t0 + datetime.timedelta(seconds=i), "insert", "r", f"p{lsn}", "c", "py", f"v{lsn}")
+        for i, lsn in enumerate([-15, -5, 3, 12])
+    ]
+    stream = spark.createDataFrame(
+        rows,
+        "lsn long, op_ts timestamp, op string, repo string, path string, "
+        "commit string, lang string, content string",
+    )
+    lake = make_lake(spark, tmp_path, "negative_lsns", n_buckets=2)
+    commits = replay(lake, stream, batch_lsns=10)
+    assert [c["batch_id"] for c in commits] == [
+        "batch--20--10", "batch--10-0", "batch-0-10", "batch-10-20",
+    ]
+    state = {
+        tuple(r[k] for k in KEY_COLS): r.asDict()
+        for r in lake.read().drop("_bucket").collect()
+    }
+    assert len(state) == 4
+    assert state == oracle_replay(stream.collect())

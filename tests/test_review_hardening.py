@@ -13,7 +13,7 @@ surfaced, all silent-corruption or crash class:
   * tag_version() must refuse to resolve a tag created on another ref
     (version numbers are per-ref — main's v12 is not the branch's v12);
   * a create() crash between publishing v0.json and writing CURRENT must
-    leave a readable table (bootstrap recovery in ``_latest_version``);
+    leave a readable table (bootstrap recovery in ``_latest_snapshot_version``);
   * state_checksum() must survive rename/drop of the content column;
   * expire_snapshots() must reclaim commit dirs whose parquet is expired
     even though Spark's _SUCCESS markers remain.

@@ -98,8 +98,7 @@ def test_spark_submit_replay_mirror_loop(tmp_path):
         "mirror_job.py", "--source", lake,
         "--target", str(tmp_path / "smirror"),
         "--checkpoint", str(tmp_path / "sckpt"),
-        "--max-polls", "0", "--mode", "streaming",
-        "--max-versions-per-batch", "2", cwd=work,
+        "--max-polls", "0", "--mode", "streaming", cwd=work,
     )[-1]
     assert smirror["mode"] == "streaming"
     assert smirror["mirror_checksum"] == replay["checksum"]
@@ -164,3 +163,23 @@ def test_spark_submit_replay_mirror_loop(tmp_path):
         "--n-buckets", "4", cwd=work,
     )[-1]
     assert s2["tables"] == s1["tables"]
+
+
+@pytest.mark.parametrize("mode, max_polls", [("streaming", "0"), ("follower", "3")])
+def test_mirror_job_rejects_version_cap_it_cannot_honour(tmp_path, mode, max_polls):
+    """--max-versions-per-batch bounds only processingTime micro-batches of
+    the streaming mode: an availableNow catch-up runs one unbounded batch
+    and the follower never reads the cap, so both fail at argument parsing
+    (exit 2) instead of silently running uncapped."""
+    out = subprocess.run(
+        [
+            sys.executable, os.path.join(REPO, "jobs", "mirror_job.py"),
+            "--source", str(tmp_path / "src"), "--target", str(tmp_path / "dst"),
+            "--checkpoint", str(tmp_path / "ckpt"), "--mode", mode,
+            "--max-polls", max_polls, "--max-versions-per-batch", "2",
+        ],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert out.returncode == 2
+    assert "--max-versions-per-batch only bounds" in out.stderr
+    assert not (tmp_path / "dst").exists()

@@ -91,13 +91,10 @@ def lww_dedup_window(events: DataFrame) -> DataFrame:
 
 
 def batch_watermarks(events: DataFrame, n_buckets: int) -> Dict[int, int]:
-    """Per-bucket max lsn of the batch (the high-watermark checkpoint).
-
-    Public helper for custom callers driving ``LakeTable.merge`` directly.
-    ``apply_batch`` deliberately does NOT call it: its ``_bucket_hints``
-    fuses this aggregation with the changed-bucket list into ONE job over
-    the already-shuffled winner set — change watermark semantics (e.g. the
-    rebucket remapping rules) in BOTH places."""
+    """Per-bucket max lsn of the batch (the high-watermark checkpoint);
+    its keys are the batch's changed buckets.  One small job.  Public
+    helper for custom callers driving ``LakeTable.merge`` directly;
+    ``apply_batch`` runs it over the already-shuffled winner set."""
     rows = (
         events.withColumn("_b", bucket_expr(n_buckets))
         .groupBy("_b")
@@ -168,16 +165,8 @@ def apply_batch(
             # (a losing event's lsn may exceed its key's winner) —
             # under-reporting is SAFE: resume re-applies those events and
             # LWW+MERGE are idempotent on them.
-            bucket_stats = (
-                winners.withColumn("_b", bucket_expr(n_buckets))
-                .groupBy("_b")
-                .agg(F.max("lsn").alias("wm"))
-                .collect()
-            )
-            return (
-                sorted(int(r["_b"]) for r in bucket_stats),
-                {int(r["_b"]): int(r["wm"]) for r in bucket_stats},
-            )
+            wms = batch_watermarks(winners, n_buckets)
+            return sorted(wms), wms
 
         # ONE snapshot read for the bucket count, the column list, the
         # types AND the defaults: per-column dict_of_types(lake) calls
@@ -251,6 +240,23 @@ def apply_batch(
             events.unpersist()
 
 
+def _occupied_slices(stream: DataFrame, batch_lsns: int) -> Dict[int, int]:
+    """Occupied LSN slices of ``stream`` as slice key -> max lsn, from ONE
+    driver-sized aggregation (one row per occupied slice, not per event).
+    Slice k covers ``[k * batch_lsns, (k + 1) * batch_lsns)``, so the key is
+    the exact integer floor of ``lsn / batch_lsns``.  Spark's ``DIV`` alone
+    truncates toward zero — a negative lsn would key one slice too high,
+    whose range filter then drops it — and a float ``floor`` loses
+    precision at Maxwell's ``fileno * 2**40`` LSNs."""
+    b = int(batch_lsns)
+    occ = (
+        stream.groupBy(F.expr(f"(lsn - pmod(lsn, {b})) DIV {b}").alias("_k"))
+        .agg(F.max("lsn").alias("_mx"))
+        .collect()
+    )
+    return {int(r["_k"]): int(r["_mx"]) for r in occ if r["_k"] is not None}
+
+
 def replay(
     lake: LakeTable,
     stream: DataFrame,
@@ -273,7 +279,7 @@ def replay(
     independently-progressing partitioned sources.
 
     Only OCCUPIED slices are applied: one small aggregation
-    (``lsn DIV batch_lsns`` -> per-slice max) yields the slice keys, and
+    (``floor(lsn / batch_lsns)`` -> per-slice max) yields the slice keys, and
     the loop walks exactly those.  Dense LSN spaces (the synthetic
     generator) see every slice as before; file-packed LSN spaces
     (:func:`~valentine_spark.cdc.wal.maxwell_position_lsn` packs
@@ -282,20 +288,13 @@ def replay(
     per rollover.  Batch ids stay ``{prefix}-{lo}-{hi}`` per occupied
     slice, so resumability is unchanged (re-runs derive the same keys).
 
-    ``max_lsn``: optional cap — slices above ``max_lsn DIV batch_lsns``
+    ``max_lsn``: optional cap — slices above ``floor(max_lsn / batch_lsns)``
     are ignored (callers pre-filter the stream to ``lsn <= max_lsn``; the
     cap keeps the contract explicit).  The occupied-slice aggregation runs
     either way; it is also what bounds each slice's watermark."""
     if batch_lsns <= 0:
         raise ValueError(f"replay: batch_lsns must be positive, got {batch_lsns}")
-    # ONE pass: occupied slice keys + per-slice max lsn (driver-sized —
-    # one row per occupied slice, not per event)
-    occ = (
-        stream.groupBy(F.expr(f"lsn DIV {int(batch_lsns)}").alias("_k"))
-        .agg(F.max("lsn").alias("_mx"))
-        .collect()
-    )
-    slices = {int(r["_k"]): int(r["_mx"]) for r in occ if r["_k"] is not None}
+    slices = _occupied_slices(stream, batch_lsns)
     if max_lsn is not None:
         slices = {k: mx for k, mx in slices.items() if k <= max_lsn // batch_lsns}
     if not slices:

@@ -18,7 +18,7 @@ Layout::
     root/
       metadata/v{N}.json        # snapshot, published put-if-absent (os.link)
       metadata/CURRENT          # latest-version HINT (os.replace; readers
-                                #   walk forward past it — see _latest_version)
+                                #   walk forward past it — see _latest_snapshot_version)
       metadata/m-{N}-{uid}.json # per-commit manifest: file lists + key-hash
                                 #   ranges for the buckets commit N changed
       metadata/applied-*.json   # rolled segment of old applied batch ids
@@ -84,12 +84,18 @@ MULTI-WRITER (optimistic concurrency, the Delta log-store / Iceberg
 catalog-CAS analogue): exactly one writer can publish ``v{N}.json`` (the
 ``os.link`` put-if-absent races atomically; on an object store the same
 protocol is a conditional PUT).  A loser re-reads the winner's snapshot and
-REBASES: MoR merges read no table state, so their already-staged files
-simply re-stamp to a later manifest ``seq`` — no Spark work re-runs;
-COW merges/compactions validate that no interleaved commit touched the
-buckets they read, and re-run their body otherwise (``CommitConflictError``
-after ``_BODY_ATTEMPTS``).  Exactly-once survives the race: a rebase
-re-checks the batch id against the winner's applied set.  ``CURRENT`` is a
+REBASES.  Every operation that rewrites buckets (COW and MoR merge,
+compact, delete/update_where, merge_into, rebucket) runs the same
+pipeline: live rows in through ``_live_rows``, staged files out through
+``_write_buckets``, one manifest commit through ``_commit_buckets``, whose
+rebase check is set by what the body read — MoR merges read no table
+state, so their already-staged files simply re-stamp to a later manifest
+``seq`` and no Spark work re-runs; the others validate that no
+interleaved commit touched the buckets they read.  A failed check raises
+``CommitConflictError`` and ``_retry_body`` re-runs the whole body against
+the fresh snapshot (up to ``_BODY_ATTEMPTS`` times; ``rebucket`` is not
+retried).  Exactly-once survives the race: a rebase re-checks the batch id
+against the winner's applied set.  ``CURRENT`` is a
 hint, not truth — a committer can die between publishing the snapshot and
 advancing the pointer, so readers walk forward from the hint while the next
 contiguous snapshot file exists.  This makes a background compactor, a
@@ -204,12 +210,15 @@ _BODY_ATTEMPTS = 4
 
 
 class CommitConflictError(RuntimeError):
-    """A concurrent commit invalidated this operation's read set (or the
-    install race was lost more than ``_INSTALL_ATTEMPTS`` times).  Writers
-    with retryable work (MERGE, compact, rebucket) catch this internally
-    and re-run their body against the fresh snapshot up to
-    ``_BODY_ATTEMPTS`` times; seeing it propagate means the table is under
-    sustained conflicting write pressure on the same buckets."""
+    """A concurrent commit invalidated this operation's read set (the
+    rebase check in ``LakeTable._commit_buckets``), or ``_commit_loop`` lost
+    the install race more than ``_INSTALL_ATTEMPTS`` times.  MERGE,
+    merge_into, compact and delete/update_where re-run their body against
+    the fresh snapshot through ``LakeTable._retry_body``, up to
+    ``_BODY_ATTEMPTS`` times; seeing it propagate from them means the table
+    is under sustained conflicting write pressure on the same buckets.
+    ``rebucket`` reads the whole table and raises it on any interleaved
+    commit — re-run it."""
 
 
 class BucketLayoutChangedError(RuntimeError):
@@ -488,6 +497,34 @@ def _bloom_maybe(bloom: dict, batch_id: str) -> bool:
     return all(bits[h >> 3] & (1 << (h & 7)) for h in _bloom_hashes(batch_id))
 
 
+def _latest_snapshot_version(meta_dir: str) -> int:
+    """Resolve the current snapshot version of the chain in ``meta_dir``
+    (a table's ``metadata/`` or one branch's ``metadata/refs/{name}/``).
+    The CURRENT pointer is a HINT (a committer can crash between
+    installing ``v{N}.json`` and advancing the pointer, and two racing
+    advances can land out of order), so walk forward while the next
+    snapshot file exists.  Snapshot files are published atomically and
+    versions are contiguous, which makes the walk exact; the hint keeps it
+    O(1) in steady state.  Pure os/json: the streaming source and sink call
+    it from Python workers that have no SparkSession."""
+    try:
+        with open(os.path.join(meta_dir, "CURRENT")) as fh:
+            v = int(fh.read().strip())
+    except FileNotFoundError:
+        # bootstrap crash window: create() died after publishing v0.json
+        # but before the first CURRENT write (for v1+ the old CURRENT
+        # exists and the walk recovers, but v0 has no older pointer to
+        # start from).  v0.json itself is complete — snapshot files are
+        # published atomically — so start the walk at 0; a missing v0
+        # really is a missing table.
+        if not os.path.exists(os.path.join(meta_dir, "v0.json")):
+            raise
+        v = 0
+    while os.path.exists(os.path.join(meta_dir, f"v{v + 1}.json")):
+        v += 1
+    return v
+
+
 class LakeTable:
     def __init__(self, root: str, spark: SparkSession, ref: str = "main"):
         self.root = root
@@ -558,7 +595,7 @@ class LakeTable:
         ``create_kw``.  Existence = ANY snapshot json in the metadata dir,
         not the CURRENT pointer: a create() that crashed between publishing
         v0.json and writing CURRENT left a valid, recoverable table
-        (``_latest_version`` rebuilds the pointer), and re-creating over it
+        (``_latest_snapshot_version`` walks past it), and re-creating over it
         would be wrong.  This is the one existence probe spark-submit jobs
         should use instead of peeking at the on-disk layout."""
         meta_dir = os.path.join(root, "metadata")
@@ -584,33 +621,9 @@ class LakeTable:
 
     def metadata(self, version: Optional[int] = None) -> dict:
         if version is None:
-            version = self._latest_version()
+            version = _latest_snapshot_version(self._meta_dir())
         with open(self._meta_path(version)) as fh:
             return json.load(fh)
-
-    def _latest_version(self) -> int:
-        """Resolve the current snapshot: the CURRENT pointer is a HINT (a
-        committer can crash between installing ``v{N}.json`` and advancing
-        the pointer, and two racing advances can land out of order), so walk
-        forward while the next snapshot file exists.  Snapshot files are
-        published atomically and versions are contiguous, which makes the
-        walk exact; the hint keeps it O(1) in steady state."""
-        try:
-            with open(self._current_path()) as fh:
-                v = int(fh.read().strip())
-        except FileNotFoundError:
-            # bootstrap crash window: create() died after publishing
-            # v0.json but before the first CURRENT write (for v1+ the old
-            # CURRENT exists and the walk recovers, but v0 has no older
-            # pointer to start from).  v0.json itself is complete —
-            # snapshot files are published atomically — so start the walk
-            # at 0; a missing v0 really is a missing table.
-            if not os.path.exists(self._meta_path(0)):
-                raise
-            v = 0
-        while os.path.exists(self._meta_path(v + 1)):
-            v += 1
-        return v
 
     def _write_json_atomic(self, rel: str, obj: dict) -> None:
         path = os.path.join(self.root, rel)
@@ -626,7 +639,7 @@ class LakeTable:
         target exists).  Exactly one writer can publish a given version;
         losers rebase and retry at the next version.  The CURRENT pointer is
         advanced AFTER the install as a best-effort hint (see
-        ``_latest_version``); a crash between the two leaves a fully
+        ``_latest_snapshot_version``); a crash between the two leaves a fully
         committed, discoverable snapshot."""
         path = self._meta_path(meta["version"])
         tmp = path + f".tmp.{uuid.uuid4().hex}"
@@ -671,6 +684,97 @@ class LakeTable:
             f"lost the snapshot install race {_INSTALL_ATTEMPTS} times at "
             f"{self.root!r} — sustained concurrent write pressure"
         )
+
+    def _retry_body(self, body):
+        """Run ``body()`` — one whole operation against a fresh snapshot —
+        re-running it when a concurrent commit invalidated what it read
+        (``CommitConflictError``), up to ``_BODY_ATTEMPTS`` times."""
+        last: Optional[CommitConflictError] = None
+        for _ in range(_BODY_ATTEMPTS):
+            try:
+                return body()
+            except CommitConflictError as e:
+                _bump("body_retries")
+                last = e
+        raise last
+
+    def _commit_buckets(
+        self,
+        read_meta: dict,
+        entry: dict,
+        buckets: List[int],
+        new_files: Dict[int, List[dict]],
+        read_set,
+        carry: Optional[Dict[int, List[dict]]] = None,
+        append: bool = False,
+        batch_id: Optional[str] = None,
+        batch_watermarks: Optional[Dict[int, int]] = None,
+        replace: Optional[dict] = None,
+    ) -> dict:
+        """Install one commit that replaces the live file lists of
+        ``buckets``: one manifest ``m-{version}-{uid}`` holds each bucket's
+        carried entries plus its staged ``new_files`` stamped with
+        ``seq = version``; a bucket left with no entries drops out of the
+        snapshot (emptied by deletes).  ``entry`` becomes the lineage entry
+        (with ``version``) and the return value.
+
+        ``read_set`` is the rebase rule — what the already-executed body
+        read, which interleaved commits must not have changed:
+
+        * a list of buckets (``_validate_base``; ``[]`` for a body that read
+          no table state — a MoR append checks only layout, schema and the
+          applied set);
+        * a callable returning that list, run only on the rebase path (a
+          probe set that costs a job to compute);
+        * ``None`` for a body that read the whole table: any interleaved
+          commit invalidates it.
+
+        ``append=False``: the commit rewrote the buckets; each keeps only its
+        ``carry`` entries (from ``read_meta``) and comes out single-version.
+        ``append=True`` (merge-on-read): the new files land beside whatever
+        is live in the bucket at install time, and a bucket that had live
+        files turns dirty.  ``replace`` overrides snapshot fields after the
+        bookkeeping advance (rebucket's layout)."""
+
+        def build(base: dict):
+            if base is not read_meta:
+                if read_set is None:
+                    raise CommitConflictError("table changed during a whole-table rewrite")
+                rs = read_set() if callable(read_set) else read_set
+                self._validate_base(read_meta, base, rs, batch_id)
+            version = base["version"] + 1
+            e = {**entry, "version": version}
+            manifest_rel = f"metadata/m-{version}-{_uid()}.json"
+            kept = self._bucket_files(base, buckets) if append else carry or {}
+            bucket_map = dict(base["buckets"])
+            dirty = dict(base.get("dirty", {}))
+            manifest: Dict[str, List[dict]] = {}
+            for b in buckets:
+                old = kept.get(b, [])
+                if append:
+                    # older files may hold a now-superseded or now-deleted
+                    # version of a key this commit wrote
+                    if old:
+                        dirty[str(b)] = True
+                else:
+                    dirty.pop(str(b), None)
+                entries = old + [{**f, "seq": version} for f in new_files.get(b, [])]
+                if entries:
+                    manifest[str(b)] = entries
+                    bucket_map[str(b)] = manifest_rel
+                else:
+                    bucket_map.pop(str(b), None)
+            segments: List[Tuple[str, dict]] = []
+            if manifest:
+                segments.append((manifest_rel, {"buckets": manifest}))
+            new_meta = self._advance_meta(
+                base, version, e, bucket_map, segments,
+                batch_watermarks, batch_id, dirty=dirty,
+            )
+            new_meta.update(replace or {})
+            return new_meta, segments, e
+
+        return self._commit_loop(read_meta, build)
 
     def _read_manifest(self, rel: str) -> dict:
         cached = self._manifest_cache.get(rel)
@@ -937,35 +1041,11 @@ class LakeTable:
         dirty buckets; clean buckets stream through scan-only as before.
         ``compact()`` restores a bucket to the scan-only path."""
         meta = self.metadata(version)
-        files = self._bucket_files(meta, buckets)
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        dirty = meta.get("dirty", {})
-        clean_paths: List[str] = []
-        mor_data: List[Tuple[str, int]] = []
-        mor_tombs: List[Tuple[str, int]] = []
-        for b, entries in files.items():
-            if str(b) in dirty:
-                for e in entries:
-                    (mor_tombs if e.get("kind") == "tomb" else mor_data).append(
-                        (e["path"], _entry_seq(e))
-                    )
-            else:
-                # a tombstone in a CLEAN bucket can only name keys that were
-                # never present (delete of a non-existent key) — skip it
-                clean_paths.extend(
-                    (e["path"], _entry_seq(e)) for e in entries if e.get("kind") != "tomb"
-                )
-        parts: List[DataFrame] = []
-        if clean_paths:
-            parts.append(self._read_files(clean_paths, schema, meta["n_buckets"], meta=meta))
-        if mor_data or mor_tombs:
-            parts.append(
-                self._resolved_files(mor_data, mor_tombs, schema, meta["n_buckets"], meta=meta)
-            )
-        if not parts:
+        df = self._live_rows(meta, self._bucket_files(meta, buckets), meta["n_buckets"])
+        if df is None:
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
             with_bucket = T.StructType(list(schema.fields) + [T.StructField(BUCKET_COL, T.LongType())])
             return self.spark.createDataFrame([], with_bucket)
-        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         return df.drop(KHASH_COL)
 
     def _scan_predicates(self, schema: T.StructType, where) -> List[tuple]:
@@ -1015,36 +1095,34 @@ class LakeTable:
 
     def _prune_for_scan(
         self, meta: dict, preds: List[tuple], buckets: Optional[List[int]]
-    ) -> Tuple[List[str], List[Tuple[str, int]], List[Tuple[str, int]], int, int]:
-        """Split the snapshot's live files into (kept clean paths, MoR data,
-        MoR tombs) under the predicates; returns (…, kept, total) data-file
-        counts for observability.  Dirty (merge-on-read) buckets are NEVER
-        stats-pruned: a key's winner is decided across file versions, so
-        dropping a file because its values don't match could resurrect an
-        older matching version of a key whose CURRENT version doesn't match
-        — those buckets resolve fully and filter after."""
+    ) -> Tuple[Dict[int, List[dict]], int, int]:
+        """The snapshot's live files that can hold a row satisfying the
+        predicates, as bucket -> entries (every bucket, possibly with no
+        entries), plus the (kept, total) data-file counts.  Clean buckets
+        keep only the data files whose stats bounds can match, looked up
+        under each file's ERA-physical column names (see ``_era_preds``).
+        Dirty (merge-on-read) buckets are NEVER stats-pruned: a key's winner
+        is decided across file versions, so dropping a file because its
+        values don't match could resurrect an older matching version of a
+        key whose CURRENT version doesn't match — those buckets resolve
+        fully and filter after."""
         files = self._bucket_files(meta, buckets)
         dirty = meta.get("dirty", {})
         era_preds = self._era_preds(meta, preds)
-        clean_paths: List[str] = []
-        mor_data: List[Tuple[str, int]] = []
-        mor_tombs: List[Tuple[str, int]] = []
+        out: Dict[int, List[dict]] = {}
         kept = total = 0
         for b, entries in files.items():
-            for e in entries:
-                is_tomb = e.get("kind") == "tomb"
-                if not is_tomb:
-                    total += 1
-                if str(b) in dirty:
-                    (mor_tombs if is_tomb else mor_data).append((e["path"], _entry_seq(e)))
-                    if not is_tomb:
-                        kept += 1
-                elif not is_tomb:
-                    seq = _entry_seq(e)
-                    if _file_may_match(e.get("cols"), era_preds(seq)):
-                        clean_paths.append((e["path"], seq))
-                        kept += 1
-        return clean_paths, mor_data, mor_tombs, kept, total
+            data = [e for e in entries if e.get("kind") != "tomb"]
+            total += len(data)
+            if str(b) in dirty:
+                out[b] = entries
+            else:
+                out[b] = data = [
+                    e for e in data
+                    if _file_may_match(e.get("cols"), era_preds(_entry_seq(e)))
+                ]
+            kept += len(data)
+        return out, kept, total
 
     def scan(
         self,
@@ -1076,17 +1154,10 @@ class LakeTable:
         meta = self.metadata(version)
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
         preds = self._scan_predicates(schema, where)
-        clean_paths, mor_data, mor_tombs, _, _ = self._prune_for_scan(meta, preds, buckets)
-        parts: List[DataFrame] = []
-        if clean_paths:
-            parts.append(self._read_files(clean_paths, schema, meta["n_buckets"], meta=meta))
-        if mor_data or mor_tombs:
-            parts.append(
-                self._resolved_files(mor_data, mor_tombs, schema, meta["n_buckets"], meta=meta)
-            )
-        if not parts:
+        files, _, _ = self._prune_for_scan(meta, preds, buckets)
+        df = self._live_rows(meta, files, meta["n_buckets"])
+        if df is None:
             return self.spark.createDataFrame([], schema)
-        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         resid = None
         for col, op, val in preds:
             c = _PRED_EXPRS[op](F.col(col), F.lit(val))
@@ -1101,7 +1172,7 @@ class LakeTable:
         meta = self.metadata(version)
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
         preds = self._scan_predicates(schema, where)
-        _, _, _, kept, total = self._prune_for_scan(meta, preds, None)
+        _, kept, total = self._prune_for_scan(meta, preds, None)
         return {"kept_files": kept, "total_files": total}
 
     def _resolved_files(
@@ -1181,6 +1252,56 @@ class LakeTable:
         return winners.where(F.col("_live") == 1).select(
             *[f.name for f in schema.fields], BUCKET_COL, KHASH_COL
         )
+
+    def _live_rows(
+        self,
+        meta: dict,
+        files_by_bucket: Dict[int, List[dict]],
+        n_buckets: int,
+        khash_in: Optional[List[int]] = None,
+    ) -> Optional[DataFrame]:
+        """The live rows held by ``files_by_bucket`` (bucket -> manifest
+        entries of snapshot ``meta``) as ``schema + _bucket + _khash``, or
+        None when there is nothing to read.  Clean buckets are scanned;
+        dirty (merge-on-read) buckets resolve the per-key winner across all
+        their data and tombstone files (``_resolved_files``).
+
+        A tombstone in a CLEAN bucket can only name keys that were never
+        present (a MoR delete into an empty bucket).  It is skipped here:
+        reading it through the data schema would resurrect its keys as live
+        null-payload rows (the ghost-tombstone hazard).  Rewrites that read
+        through here leave such files out of the bucket's new manifest —
+        semantics-free, they suppress nothing — and GC reclaims them.
+
+        ``n_buckets`` labels ``_bucket`` (``rebucket`` passes the NEW
+        layout); ``khash_in`` keeps only those key hashes (point lookups)."""
+        schema = T.StructType.fromJson(json.loads(meta["schema"]))
+        dirty = meta.get("dirty", {})
+        clean: List[Tuple[str, int]] = []
+        mor_data: List[Tuple[str, int]] = []
+        mor_tombs: List[Tuple[str, int]] = []
+        for b, entries in files_by_bucket.items():
+            for e in entries:
+                tomb = e.get("kind") == "tomb"
+                if str(b) in dirty:
+                    (mor_tombs if tomb else mor_data).append((e["path"], _entry_seq(e)))
+                elif not tomb:
+                    clean.append((e["path"], _entry_seq(e)))
+        parts: List[DataFrame] = []
+        if clean:
+            df = self._read_files(clean, schema, n_buckets, meta=meta)
+            if khash_in is not None:
+                df = df.where(F.col(KHASH_COL).isin(khash_in))
+            parts.append(df)
+        if mor_data or mor_tombs:
+            parts.append(
+                self._resolved_files(
+                    mor_data, mor_tombs, schema, n_buckets, khash_in=khash_in, meta=meta
+                )
+            )
+        if not parts:
+            return None
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     # -- MERGE -----------------------------------------------------------
 
@@ -1325,6 +1446,44 @@ class LakeTable:
             out.setdefault(bucket, []).append(entry)
         return out
 
+    def _write_buckets(
+        self,
+        df: DataFrame,
+        meta: dict,
+        n_parts: int,
+        order: Optional[list] = None,
+        kind: str = "data",
+        rel_dir: Optional[str] = None,
+    ) -> Dict[int, List[dict]]:
+        """Stage ``_bucket``/``_khash``-stamped rows as parquet: one shuffle
+        into ``n_parts`` bucket partitions, sorted by ``order`` (default
+        bucket then khash, which makes the files key-hash-clustered), one
+        directory per bucket.  Returns the files' manifest entries by
+        bucket (``_new_file_stats``).
+
+        The files go under a commit-unique ``data/c-{uid}`` dir (or
+        ``rel_dir``): racing writers never share a path, and the files are
+        version-agnostic (their MoR resolution order is the
+        manifest-stamped ``seq``), so a lost install race rebases WITHOUT
+        re-running this write.  Data files are capped at the table's
+        ``target_file_rows`` and carry its parquet bloom filters;
+        tombstone files (``kind="tomb"``) get neither."""
+        rel_dir = rel_dir or os.path.join("data", f"c-{_uid()}")
+        out_dir = os.path.join(self.root, rel_dir)
+        writer = (
+            df.repartition(n_parts, F.col(BUCKET_COL))
+            .sortWithinPartitions(*(order or [BUCKET_COL, KHASH_COL]))
+            .write.mode("overwrite")
+        )
+        if kind == "data":
+            writer = writer.option(
+                "maxRecordsPerFile", meta.get("target_file_rows", 1_000_000)
+            ).options(**_bloom_opts(meta))
+        writer.partitionBy(BUCKET_COL).parquet(out_dir)
+        return self._new_file_stats(
+            out_dir, rel_dir, kind=kind, stats_cols=meta.get("stats_cols")
+        )
+
     def merge(
         self,
         upserts: DataFrame,
@@ -1374,36 +1533,15 @@ class LakeTable:
         holds across writers: a duplicate ``batch_id`` racing in from two
         committers lands exactly once (the loser's rebase re-checks the
         applied set against the winner's snapshot)."""
-        last: Optional[CommitConflictError] = None
-        for _ in range(_BODY_ATTEMPTS):
-            meta = self.metadata()
-            if self.is_applied(batch_id, meta):
-                return {"batch_id": batch_id, "skipped": True, "version": meta["version"]}
-            # bucket ids in caller-supplied hints are layout-relative: if a
-            # concurrent rebucket() replaced the layout the caller computed
-            # them under, honoring them would prune the wrong files and
-            # advance the wrong watermarks — fail to the caller, which
-            # recomputes against the fresh snapshot
-            if hint_n_buckets is not None and hint_n_buckets != meta["n_buckets"]:
-                raise BucketLayoutChangedError(
-                    f"hints computed for n_buckets={hint_n_buckets} but the "
-                    f"table now has n_buckets={meta['n_buckets']} "
-                    "(concurrent rebucket); recompute changed_buckets / "
-                    "batch_watermarks against the current snapshot"
-                )
-            try:
-                return self._merge_once(
-                    meta, upserts, deletes, batch_id, batch_watermarks,
-                    lineage, changed_buckets, mode, touched_hint,
-                )
-            except CommitConflictError as e:
-                _bump("body_retries")
-                last = e
-        raise last
+        return self._retry_body(
+            lambda: self._merge_once(
+                upserts, deletes, batch_id, batch_watermarks, lineage,
+                changed_buckets, mode, touched_hint, hint_n_buckets,
+            )
+        )
 
     def _merge_once(
         self,
-        meta: dict,
         upserts: DataFrame,
         deletes: DataFrame,
         batch_id: str,
@@ -1412,9 +1550,25 @@ class LakeTable:
         changed_buckets: Optional[List[int]],
         mode: Optional[str],
         touched_hint: Optional[DataFrame],
+        hint_n_buckets: Optional[int],
     ) -> dict:
-        """One MERGE body against a base snapshot; raises
+        """One MERGE body against the latest snapshot; raises
         ``CommitConflictError`` when a concurrent commit invalidates it."""
+        meta = self.metadata()
+        if self.is_applied(batch_id, meta):
+            return {"batch_id": batch_id, "skipped": True, "version": meta["version"]}
+        # bucket ids in caller-supplied hints are layout-relative: if a
+        # concurrent rebucket() replaced the layout the caller computed
+        # them under, honoring them would prune the wrong files and
+        # advance the wrong watermarks — fail to the caller, which
+        # recomputes against the fresh snapshot
+        if hint_n_buckets is not None and hint_n_buckets != meta["n_buckets"]:
+            raise BucketLayoutChangedError(
+                f"hints computed for n_buckets={hint_n_buckets} but the "
+                f"table now has n_buckets={meta['n_buckets']} "
+                "(concurrent rebucket); recompute changed_buckets / "
+                "batch_watermarks against the current snapshot"
+            )
         mode = mode or meta.get("write_mode", "cow")
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r} (use 'cow' or 'mor')")
@@ -1498,14 +1652,8 @@ class LakeTable:
 
         _t0 = time.time()
         current_files = self._bucket_files(meta, changed)
-        # tombstone entries in a CLEAN bucket name never-present keys only
-        # (a MoR delete into an empty bucket; dirty buckets were compacted
-        # above).  They are skipped at read and MUST be excluded here too:
-        # rewriting one through the data-schema read path would resurrect
-        # its keys as live null-payload rows (the ghost-tombstone hazard
-        # compact()/read() already guard).  Excluding them from the rewrite
-        # candidate set also drops them from rewritten buckets' manifests —
-        # semantics-free (nothing to suppress) — and GC reclaims the files.
+        # clean-bucket tombstones (see _live_rows) are no rewrite candidates
+        # and drop out of rewritten buckets' manifests
         flat_entries = [
             (b, e)
             for b, entries in current_files.items()
@@ -1534,26 +1682,20 @@ class LakeTable:
             MERGE_TIMINGS.append(("merge_prune", time.time() - _t0))
 
         _t_write0 = time.time()
-        rewrite = [flat_entries[i] for i in sorted(touched_ids)]
+        rewrite: Dict[int, List[dict]] = {}
         kept: Dict[int, List[dict]] = {b: [] for b in current_files}
         for i, (b, e) in enumerate(flat_entries):  # one pass, O(n_files)
-            if i not in touched_ids:
-                kept[b].append(e)
-        commit["files_rewritten"] = len(rewrite)
-        commit["bytes_rewritten"] = sum(e["bytes"] for _, e in rewrite)
+            (rewrite.setdefault(b, []) if i in touched_ids else kept[b]).append(e)
+        commit["files_rewritten"] = len(touched_ids)
+        commit["bytes_rewritten"] = sum(e["bytes"] for es in rewrite.values() for e in es)
 
         new_files: Dict[int, List[dict]] = {}
         if changed:
-            schema = T.StructType.fromJson(json.loads(meta["schema"]))
             upsert_part = upserts.select(*schema_cols, BUCKET_COL, KHASH_COL)
             if rewrite:
-                current = self._read_files(
-                    [(e["path"], _entry_seq(e)) for _, e in rewrite],
-                    schema, n_buckets, meta=meta,
-                )
                 # co-partitioned anti-join: survivors = rows of rewritten
                 # files whose key is NOT touched by this batch
-                survivors = current.join(
+                survivors = self._live_rows(meta, rewrite, n_buckets).join(
                     touched_keys.drop(KHASH_COL), [*KEY_COLS, BUCKET_COL], "left_anti"
                 )
                 merged = survivors.select(*schema_cols, BUCKET_COL, KHASH_COL).unionByName(
@@ -1561,22 +1703,7 @@ class LakeTable:
                 )
             else:
                 merged = upsert_part
-            # staged under a commit-unique dir: racing writers never share a
-            # path, and the files are version-agnostic (their MoR resolution
-            # order is the manifest-stamped ``seq``), so a lost install race
-            # rebases WITHOUT re-running this write
-            rel_dir = os.path.join("data", f"c-{_uid()}")
-            out_dir = os.path.join(self.root, rel_dir)
-            (
-                merged.repartition(max(len(changed), 1), F.col(BUCKET_COL))
-                .sortWithinPartitions(BUCKET_COL, KHASH_COL)
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", meta.get("target_file_rows", 1_000_000))
-                .options(**_bloom_opts(meta))
-                .partitionBy(BUCKET_COL)
-                .parquet(out_dir)
-            )
-            new_files = self._new_file_stats(out_dir, rel_dir, stats_cols=meta.get("stats_cols"))
+            new_files = self._write_buckets(merged, meta, max(len(changed), 1))
             commit["files_written"] = sum(len(es) for es in new_files.values())
             commit["bytes_written"] = sum(
                 e["bytes"] for es in new_files.values() for e in es
@@ -1587,41 +1714,15 @@ class LakeTable:
         # a bucket's live list changed iff one of its files was rewritten
         # or a new file landed in it; every other bucket keeps pointing at
         # its existing manifest (so a changed=ALL-buckets replay does NOT
-        # rewrite O(total files) of manifest entries)
-        touched_buckets = {flat_entries[i][0] for i in touched_ids}
-        read_meta = meta
-
-        def build(base: dict):
-            if base is not read_meta:
-                # the rewrite's survivors are only valid against the file
-                # sets it read: every bucket this merge READ (changed) must
-                # be untouched by the interleaved commits
-                self._validate_base(read_meta, base, changed, batch_id)
-            new_version = base["version"] + 1
-            c = {**commit, "version": new_version}
-            manifest_rel = f"metadata/m-{new_version}-{_uid()}.json"
-            bucket_map = dict(base["buckets"])
-            segments: List[Tuple[str, dict]] = []
-            manifest_buckets: Dict[str, List[dict]] = {}
-            for b in sorted(touched_buckets | set(new_files)):
-                entries = kept.get(b, []) + [
-                    {**e, "seq": new_version} for e in new_files.get(b, [])
-                ]
-                if entries:
-                    manifest_buckets[str(b)] = entries
-                    bucket_map[str(b)] = manifest_rel
-                else:
-                    bucket_map.pop(str(b), None)  # bucket emptied by deletes
-            if manifest_buckets:
-                segments.append((manifest_rel, {"buckets": manifest_buckets}))
-            new_meta = self._advance_meta(
-                base, new_version, c, bucket_map, segments,
-                batch_watermarks, batch_id, dirty=base.get("dirty", {}),
-            )
-            return new_meta, segments, c
-
+        # rewrite O(total files) of manifest entries).  The rewrite's
+        # survivors are only valid against the file sets it read: every
+        # bucket this merge READ (changed) must be untouched on rebase.
         _t_io0 = time.time()
-        result = self._commit_loop(read_meta, build)
+        result = self._commit_buckets(
+            meta, commit, sorted(set(rewrite) | set(new_files)), new_files,
+            read_set=changed, carry=kept, batch_id=batch_id,
+            batch_watermarks=batch_watermarks,
+        )
         if MERGE_TIMINGS is not None:
             MERGE_TIMINGS.append(("commit_io", time.time() - _t_io0))
         return result
@@ -1745,25 +1846,13 @@ class LakeTable:
         if lineage:
             commit.update(lineage)
 
-        rel_dir = os.path.join("data", f"c-{_uid()}")
-        out_dir = os.path.join(self.root, rel_dir)
-
         _t0 = time.time()
         n_parts = max(len(changed), 1)
-        (
-            upserts.select(*schema_cols, BUCKET_COL, KHASH_COL)
-            .repartition(n_parts, F.col(BUCKET_COL))
-            .sortWithinPartitions(BUCKET_COL, KHASH_COL)
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", meta.get("target_file_rows", 1_000_000))
-            .options(**_bloom_opts(meta))
-            .partitionBy(BUCKET_COL)
-            .parquet(out_dir)
+        rel_dir = os.path.join("data", f"c-{_uid()}")
+        new_files = self._write_buckets(
+            upserts.select(*schema_cols, BUCKET_COL, KHASH_COL), meta, n_parts,
+            rel_dir=rel_dir,
         )
-        new_files = self._new_file_stats(out_dir, rel_dir, stats_cols=meta.get("stats_cols"))
-
-        tomb_rel_dir = os.path.join(rel_dir, "_tombs")
-        tomb_out = os.path.join(self.root, tomb_rel_dir)
         # Tombstones need only the batch's delete KEYS, and the raw
         # pre-dedup batch supplies them without re-running the LWW
         # reduction (the second full shuffle this job used to cost).
@@ -1780,15 +1869,9 @@ class LakeTable:
             )
         else:
             tomb_keys = deletes.select(*KEY_COLS, BUCKET_COL, KHASH_COL)
-        (
-            tomb_keys
-            .repartition(n_parts, F.col(BUCKET_COL))
-            .sortWithinPartitions(BUCKET_COL, KHASH_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(tomb_out)
+        tomb_files = self._write_buckets(
+            tomb_keys, meta, n_parts, kind="tomb", rel_dir=os.path.join(rel_dir, "_tombs")
         )
-        tomb_files = self._new_file_stats(tomb_out, tomb_rel_dir, kind="tomb")
         commit["tomb_files"] = sum(len(es) for es in tomb_files.values())
         commit["files_written"] = sum(len(es) for es in new_files.values()) + commit["tomb_files"]
         commit["bytes_written"] = sum(
@@ -1815,60 +1898,20 @@ class LakeTable:
         batch_watermarks: Optional[Dict[int, int]] = None,
     ) -> dict:
         """Metadata-only install of an append-style (merge-on-read) commit:
-        the already-written data/tombstone entries land in the touched
-        buckets' manifests with ``seq = new version`` and the buckets are
-        marked dirty when they had prior files.  Pure file/JSON I/O — no
-        SparkSession — shared by ``_merge_mor`` and the streaming sink's
-        driver-side ``commit`` (which runs in a Python worker without
-        Spark).  ``commit['changed_buckets']`` names the touched buckets
-        whose existing entries are carried forward."""
-        changed = commit["changed_buckets"]
-
-        def build(base: dict):
-            if base is not read_meta:
-                # no file state was read; only layout/schema changes (which
-                # invalidate the staged files' bucket/khash columns) or a
-                # concurrently-landed duplicate batch id block the rebase
-                if base["n_buckets"] != read_meta["n_buckets"]:
-                    raise CommitConflictError("bucket layout changed concurrently")
-                if base["schema"] != read_meta["schema"]:
-                    raise CommitConflictError("schema evolved concurrently")
-                if self.is_applied(batch_id, base):
-                    raise _SkipCommit(
-                        {"batch_id": batch_id, "skipped": True, "version": base["version"]}
-                    )
-            new_version = base["version"] + 1
-            c = {**commit, "version": new_version}
-            manifest_rel = f"metadata/m-{new_version}-{_uid()}.json"
-            current_files = self._bucket_files(base, changed)
-            dirty = dict(base.get("dirty", {}))
-            bucket_map = dict(base["buckets"])
-            segments: List[Tuple[str, dict]] = []
-            manifest_buckets: Dict[str, List[dict]] = {}
-            for b in sorted(set(new_files) | set(tomb_files)):
-                existing = current_files.get(b, [])
-                entries = (
-                    existing
-                    + [{**e, "seq": new_version} for e in new_files.get(b, [])]
-                    + [{**e, "seq": new_version} for e in tomb_files.get(b, [])]
-                )
-                manifest_buckets[str(b)] = entries
-                bucket_map[str(b)] = manifest_rel
-                # multi-version state iff the bucket had prior files (every
-                # b in this loop received new data or tombstones, so older
-                # files could hold a now-superseded or now-deleted version
-                # of a key this commit wrote)
-                if existing:
-                    dirty[str(b)] = True
-            if manifest_buckets:
-                segments.append((manifest_rel, {"buckets": manifest_buckets}))
-            new_meta = self._advance_meta(
-                base, new_version, c, bucket_map, segments,
-                batch_watermarks, batch_id, dirty=dirty,
-            )
-            return new_meta, segments, c
-
-        return self._commit_loop(read_meta, build)
+        the already-written data/tombstone entries land beside the touched
+        buckets' live entries with ``seq = new version``, and buckets that
+        had prior files turn dirty.  Pure file/JSON I/O — no SparkSession —
+        shared by ``_merge_mor`` and the streaming sink's driver-side
+        ``commit`` (which runs in a Python worker without Spark).  No file
+        state was read, so only a layout or schema change (which invalidates
+        the staged files' bucket/khash columns) or a concurrently-landed
+        duplicate batch id blocks a rebase."""
+        buckets = sorted(set(new_files) | set(tomb_files))
+        staged = {b: new_files.get(b, []) + tomb_files.get(b, []) for b in buckets}
+        return self._commit_buckets(
+            read_meta, commit, buckets, staged, read_set=[], append=True,
+            batch_id=batch_id, batch_watermarks=batch_watermarks,
+        )
 
     def evolve_schema(
         self,
@@ -2383,14 +2426,9 @@ class LakeTable:
         re-run (``_BODY_ATTEMPTS``); commits into other buckets rebase for
         free.  This is what makes a background compactor safe to run beside
         a live ingest writer."""
-        last: Optional[CommitConflictError] = None
-        for _ in range(_BODY_ATTEMPTS):
-            try:
-                return self._compact_once(buckets, min_files, sort_cols, zorder)
-            except CommitConflictError as e:
-                _bump("body_retries")
-                last = e
-        raise last
+        return self._retry_body(
+            lambda: self._compact_once(buckets, min_files, sort_cols, zorder)
+        )
 
     def _compact_once(
         self,
@@ -2410,39 +2448,12 @@ class LakeTable:
         if not todo:
             return {"compacted_buckets": 0, "files_before": 0, "files_after": 0}
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        rel_dir = os.path.join("data", f"c-{_uid()}")
-        out_dir = os.path.join(self.root, rel_dir)
-        # kind filter matters: a CLEAN bucket can still hold tombstones
-        # (deletes of never-present keys); reading one with the data schema
-        # would resurrect those keys as null-payload rows
-        clean_paths = [
-            (e["path"], _entry_seq(e))
-            for b, es in todo.items()
-            if str(b) not in dirty
-            for e in es
-            if e.get("kind") != "tomb"
-        ]
-        mor_data = [
-            (e["path"], _entry_seq(e)) for b, es in todo.items() if str(b) in dirty
-            for e in es if e.get("kind") != "tomb"
-        ]
-        mor_tombs = [
-            (e["path"], _entry_seq(e)) for b, es in todo.items() if str(b) in dirty
-            for e in es if e.get("kind") == "tomb"
-        ]
-        parts: List[DataFrame] = []
-        if clean_paths:
-            parts.append(self._read_files(clean_paths, schema, meta["n_buckets"], meta=meta))
-        if mor_data or mor_tombs:
-            parts.append(
-                self._resolved_files(mor_data, mor_tombs, schema, meta["n_buckets"], meta=meta)
-            )
         known = {f.name for f in schema.fields}
         for c in sort_cols or []:
             if c not in known:
                 raise KeyError(f"sort column {c!r} not in table schema {sorted(known)}")
-        if parts:
-            df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        df = self._live_rows(meta, todo, meta["n_buckets"])
+        if df is not None:
             if zorder:
                 from .clustering import zorder_column
 
@@ -2453,57 +2464,21 @@ class LakeTable:
                 ]
             else:
                 order = [BUCKET_COL, *(sort_cols or []), KHASH_COL]
-            (
-                df.repartition(len(todo), F.col(BUCKET_COL))
-                .sortWithinPartitions(*order)
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", meta.get("target_file_rows", 1_000_000))
-                .options(**_bloom_opts(meta))
-                .partitionBy(BUCKET_COL)
-                .parquet(out_dir)
-            )
-            new_files = self._new_file_stats(out_dir, rel_dir, stats_cols=meta.get("stats_cols"))
+            new_files = self._write_buckets(df, meta, len(todo), order)
         else:
             # every qualifying bucket holds only clean-bucket tombstones
             # (deletes of never-present keys): nothing to read or rewrite —
             # the commit simply drops those entries (semantics-free, they
             # suppress nothing) and GC reclaims the files
             new_files = {}
-        read_meta = meta
-        entry_base = {
+        entry = {
             "compaction": sorted(todo),
             "files_before": sum(len(es) for es in todo.values()),
             "files_after": sum(len(es) for es in new_files.values()),
         }
-
-        def build(base: dict):
-            if base is not read_meta:
-                self._validate_base(read_meta, base, sorted(todo), None)
-            new_version = base["version"] + 1
-            entry = {**entry_base, "version": new_version}
-            manifest_rel = f"metadata/m-{new_version}-{_uid()}.json"
-            manifest_buckets = {
-                str(b): [{**e, "seq": new_version} for e in es]
-                for b, es in new_files.items()
-            }
-            bucket_map = dict(base["buckets"])
-            d = dict(base.get("dirty", {}))
-            for b in todo:
-                d.pop(str(b), None)  # single-version again
-                if str(b) in manifest_buckets:
-                    bucket_map[str(b)] = manifest_rel
-                else:  # bucket fully emptied (every key tombstoned)
-                    bucket_map.pop(str(b), None)
-            segments: List[Tuple[str, dict]] = []
-            if manifest_buckets:
-                segments.append((manifest_rel, {"buckets": manifest_buckets}))
-            new_meta = self._advance_meta(
-                base, new_version, entry, bucket_map, segments,
-                None, None, dirty=d,
-            )
-            return new_meta, segments, entry
-
-        return self._commit_loop(read_meta, build)
+        return self._commit_buckets(
+            meta, entry, sorted(todo), new_files, read_set=sorted(todo)
+        )
 
     def delete_where(self, where, batch_id: Optional[str] = None) -> dict:
         """Row-level predicate delete (``DELETE FROM t WHERE …`` — the
@@ -2518,7 +2493,7 @@ class LakeTable:
         Dirty (merge-on-read) buckets resolve fully on the way through and
         come out clean (same as ``compact``) — a predicate cannot be
         evaluated against unresolved multi-version state."""
-        return self._mutate_where(where, None, batch_id)
+        return self._retry_body(lambda: self._mutate_once(where, None, batch_id))
 
     def update_where(
         self, where, set_values: Dict[str, object], batch_id: Optional[str] = None
@@ -2532,19 +2507,8 @@ class LakeTable:
         dirty-bucket handling as in ``delete_where``."""
         if not set_values:
             raise ValueError("update_where requires at least one SET column")
-        return self._mutate_where(where, dict(set_values), batch_id)
-
-    def _mutate_where(
-        self, where, set_values: Optional[Dict[str, object]], batch_id: Optional[str]
-    ) -> dict:
-        last: Optional[CommitConflictError] = None
-        for _ in range(_BODY_ATTEMPTS):
-            try:
-                return self._mutate_once(where, set_values, batch_id)
-            except CommitConflictError as e:
-                _bump("body_retries")
-                last = e
-        raise last
+        set_values = dict(set_values)
+        return self._retry_body(lambda: self._mutate_once(where, set_values, batch_id))
 
     def _mutate_once(
         self, where, set_values: Optional[Dict[str, object]], batch_id: Optional[str]
@@ -2564,55 +2528,24 @@ class LakeTable:
                 )
             if c not in names:
                 raise KeyError(f"SET column {c!r} not in table schema {sorted(names)}")
-        files = self._bucket_files(meta)
-        dirty = meta.get("dirty", {})
-        era_preds = self._era_preds(meta, preds)
         # plan: dirty buckets resolve fully; clean buckets rewrite only the
         # files whose stats bounds can match, carrying the rest untouched
-        # (bounds looked up under each file's ERA-physical column names —
-        # see _era_preds for the rename-into-reused-name hazard)
-        rewrite_paths: List[str] = []
-        mor_data: List[Tuple[str, int]] = []
-        mor_tombs: List[Tuple[str, int]] = []
-        carry: Dict[int, List[dict]] = {}
-        touched: List[int] = []
-        for b, entries in files.items():
-            if str(b) in dirty:
-                touched.append(b)
-                for e in entries:
-                    (mor_tombs if e.get("kind") == "tomb" else mor_data).append(
-                        (e["path"], _entry_seq(e))
-                    )
-            else:
-                cand = [
-                    e for e in entries
-                    if e.get("kind") != "tomb"
-                    and _file_may_match(e.get("cols"), era_preds(_entry_seq(e)))
-                ]
-                if cand:
-                    touched.append(b)
-                    rewrite_paths.extend((e["path"], _entry_seq(e)) for e in cand)
-                    keep = [e for e in entries if e not in cand]
-                    carry[b] = keep
+        files = self._bucket_files(meta)
+        read, n_read, _ = self._prune_for_scan(meta, preds, None)
+        read = {b: es for b, es in read.items() if es}
+        touched = list(read)
+        carry = {b: [e for e in files[b] if e not in es] for b, es in read.items()}
         op_name = "update" if set_values else "delete"
         if not touched and batch_id is None:
             return {"mutation": op_name, "rows_matched": 0, "files_rewritten": 0,
                     "skipped": False, "version": meta["version"]}
 
-        parts: List[DataFrame] = []
-        if rewrite_paths:
-            parts.append(self._read_files(rewrite_paths, schema, meta["n_buckets"], meta=meta))
-        if mor_data or mor_tombs:
-            parts.append(
-                self._resolved_files(mor_data, mor_tombs, schema, meta["n_buckets"], meta=meta)
-            )
+        df = self._live_rows(meta, read, meta["n_buckets"])
         new_files: Dict[int, List[dict]] = {}
         matched = 0
-        rel_dir = os.path.join("data", f"c-{_uid()}")
-        if parts:
+        if df is not None:
             from pyspark.sql import Observation
 
-            df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
             resid = None
             for col, op, val in preds:
                 c = _PRED_EXPRS[op](F.col(col), F.lit(val))
@@ -2643,17 +2576,7 @@ class LakeTable:
                 out = df.select(*proj)
             else:
                 out = df.where(~hit)
-            out_dir = os.path.join(self.root, rel_dir)
-            (
-                out.repartition(max(len(touched), 1), F.col(BUCKET_COL))
-                .sortWithinPartitions(BUCKET_COL, KHASH_COL)
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", meta.get("target_file_rows", 1_000_000))
-                .options(**_bloom_opts(meta))
-                .partitionBy(BUCKET_COL)
-                .parquet(out_dir)
-            )
-            new_files = self._new_file_stats(out_dir, rel_dir, stats_cols=meta.get("stats_cols"))
+            new_files = self._write_buckets(out, meta, max(len(touched), 1))
             try:
                 matched = int(obs.get["matched"])  # write action already ran
             except Exception:
@@ -2662,48 +2585,20 @@ class LakeTable:
                 # asserts on the empty sink's missing metrics); this rare
                 # path pays the second scan the observation exists to avoid
                 matched = df.where(hit).count()
-        read_meta = meta
-        entry_base = {
+        entry = {
             "mutation": op_name,
             "predicates": [[c, o, repr(v)] for c, o, v in preds],
             "rows_matched": matched,
-            "files_rewritten": len(rewrite_paths) + len(mor_data),
+            "files_rewritten": n_read,
         }
         if set_values:
-            entry_base["set_columns"] = sorted(set_values)
-
-        def build(base: dict):
-            if base is not read_meta:
-                self._validate_base(read_meta, base, sorted(touched), batch_id)
-            new_version = base["version"] + 1
-            entry = {**entry_base, "version": new_version}
-            if batch_id is not None:
-                entry["batch_id"] = batch_id
-            bucket_map = dict(base["buckets"])
-            d = dict(base.get("dirty", {}))
-            manifest_buckets: Dict[str, List[dict]] = {}
-            for b in touched:
-                d.pop(str(b), None)  # resolved buckets are single-version now
-                entries = list(carry.get(b, [])) + [
-                    {**e, "seq": new_version} for e in new_files.get(b, [])
-                ]
-                if entries:
-                    manifest_buckets[str(b)] = entries
-                else:  # every row of the bucket was deleted
-                    bucket_map.pop(str(b), None)
-            segments: List[Tuple[str, dict]] = []
-            if manifest_buckets:
-                manifest_rel = f"metadata/m-{new_version}-{_uid()}.json"
-                for b in manifest_buckets:
-                    bucket_map[b] = manifest_rel
-                segments.append((manifest_rel, {"buckets": manifest_buckets}))
-            new_meta = self._advance_meta(
-                base, new_version, entry, bucket_map, segments,
-                None, batch_id, dirty=d,
-            )
-            return new_meta, segments, entry
-
-        return self._commit_loop(read_meta, build)
+            entry["set_columns"] = sorted(set_values)
+        if batch_id is not None:
+            entry["batch_id"] = batch_id
+        return self._commit_buckets(
+            meta, entry, touched, new_files, read_set=sorted(touched),
+            carry=carry, batch_id=batch_id,
+        )
 
     def merge_into(self, source: DataFrame) -> "MergeIntoBuilder":
         """General conditional MERGE (the Delta/Iceberg ``MERGE INTO``
@@ -2771,44 +2666,11 @@ class LakeTable:
                 f"(got {old_n} -> {new_n_buckets}); chain factors for "
                 f"other targets"
             )
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        files = self._bucket_files(meta, None)
-        dirty = meta.get("dirty", {})
-        clean_paths = [
-            (e["path"], _entry_seq(e)) for b, es in files.items() if str(b) not in dirty
-            for e in es if e.get("kind") != "tomb"
-        ]
-        mor_data = [
-            (e["path"], _entry_seq(e)) for b, es in files.items() if str(b) in dirty
-            for e in es if e.get("kind") != "tomb"
-        ]
-        mor_tombs = [
-            (e["path"], _entry_seq(e)) for b, es in files.items() if str(b) in dirty
-            for e in es if e.get("kind") == "tomb"
-        ]
-        parts: List[DataFrame] = []
-        if clean_paths:
-            # note new_n_buckets: rows are labeled in the NEW layout
-            parts.append(self._read_files(clean_paths, schema, new_n_buckets, meta=meta))
-        if mor_data or mor_tombs:
-            parts.append(
-                self._resolved_files(mor_data, mor_tombs, schema, new_n_buckets, meta=meta)
-            )
+        # rows are labeled in the NEW layout
+        df = self._live_rows(meta, self._bucket_files(meta, None), new_n_buckets)
         new_files: Dict[int, List[dict]] = {}
-        if parts:
-            df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-            rel_dir = os.path.join("data", f"c-{_uid()}")
-            out_dir = os.path.join(self.root, rel_dir)
-            (
-                df.repartition(new_n_buckets, F.col(BUCKET_COL))
-                .sortWithinPartitions(BUCKET_COL, KHASH_COL)
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", meta.get("target_file_rows", 1_000_000))
-                .options(**_bloom_opts(meta))
-                .partitionBy(BUCKET_COL)
-                .parquet(out_dir)
-            )
-            new_files = self._new_file_stats(out_dir, rel_dir, stats_cols=meta.get("stats_cols"))
+        if df is not None:
+            new_files = self._write_buckets(df, meta, new_n_buckets)
 
         old_wms = meta.get("watermarks", {})
         new_wms: Dict[str, int] = {}
@@ -2825,38 +2687,19 @@ class LakeTable:
                     if all(s in old_wms for s in srcs):
                         new_wms[str(b)] = min(old_wms[s] for s in srcs)
 
-        entry_base = {
+        entry = {
             "rebucket": [old_n, new_n_buckets],
             "files_after": sum(len(es) for es in new_files.values()),
         }
         if note:
-            entry_base["note"] = note
-        read_meta = meta
-
-        def build(base: dict):
-            if base is not read_meta and base["version"] != read_meta["version"]:
-                # rebucket reads the WHOLE table: any interleaved commit
-                # invalidates the rewrite — re-run the body
-                raise CommitConflictError("table changed during rebucket")
-            new_version = base["version"] + 1
-            entry = {**entry_base, "version": new_version}
-            manifest_rel = f"metadata/m-{new_version}-{_uid()}.json"
-            manifest_buckets = {
-                str(b): [{**e, "seq": new_version} for e in es]
-                for b, es in new_files.items()
-            }
-            bucket_map = {str(b): manifest_rel for b in new_files}
-            segments: List[Tuple[str, dict]] = []
-            if manifest_buckets:
-                segments.append((manifest_rel, {"buckets": manifest_buckets}))
-            new_meta = self._advance_meta(
-                base, new_version, entry, bucket_map, segments, None, None, dirty={},
-            )
-            new_meta["n_buckets"] = new_n_buckets
-            new_meta["watermarks"] = new_wms
-            return new_meta, segments, entry
-
-        return self._commit_loop(read_meta, build)
+            entry["note"] = note
+        # every bucket of the old layout is replaced; the body read the
+        # whole table, so any interleaved commit invalidates the rewrite
+        return self._commit_buckets(
+            meta, entry, sorted({int(b) for b in meta["buckets"]} | set(new_files)),
+            new_files, read_set=None,
+            replace={"n_buckets": new_n_buckets, "watermarks": new_wms, "dirty": {}},
+        )
 
     def compact_if_needed(self, max_files_per_bucket: int = 16) -> dict:
         """Bounded read-amplification policy for a merge-on-read tail: a
@@ -3578,42 +3421,23 @@ class LakeTable:
         by_bucket: Dict[int, List[int]] = {}
         for r in krows:
             by_bucket.setdefault(int(r[BUCKET_COL]), []).append(int(r[KHASH_COL]))
-        files = self._bucket_files(meta, sorted(by_bucket))
-        dirty = meta.get("dirty", {})
-        clean_paths: List[str] = []
-        mor_data: List[Tuple[str, int]] = []
-        mor_tombs: List[Tuple[str, int]] = []
-        for b, entries in files.items():
-            hs = by_bucket.get(int(b), [])
-            for e in entries:
-                lo = e.get("min_h", _FULL_RANGE[0])
-                hi = e.get("max_h", _FULL_RANGE[1])
-                if not any(lo <= h <= hi for h in hs):
-                    continue  # file range cannot contain any requested key
-                if str(b) in dirty:
-                    (mor_tombs if e.get("kind") == "tomb" else mor_data).append(
-                        (e["path"], _entry_seq(e))
-                    )
-                elif e.get("kind") != "tomb":
-                    clean_paths.append((e["path"], _entry_seq(e)))
+        # keep only the files whose khash range can contain a requested key
+        files = {
+            b: [
+                e for e in entries
+                if any(
+                    e.get("min_h", _FULL_RANGE[0]) <= h <= e.get("max_h", _FULL_RANGE[1])
+                    for h in by_bucket[b]
+                )
+            ]
+            for b, entries in self._bucket_files(meta, sorted(by_bucket)).items()
+        }
         # khash IN-filter: files are khash-sorted, so this pushes down to
         # parquet row-group stats and skips pages inside the kept files too
         all_hs = sorted({h for hs in by_bucket.values() for h in hs})
-        hfilter = F.col(KHASH_COL).isin(all_hs)
-        parts: List[DataFrame] = []
-        if clean_paths:
-            parts.append(
-                self._read_files(clean_paths, schema, n_buckets, meta=meta).where(hfilter)
-            )
-        if mor_data or mor_tombs:
-            parts.append(
-                self._resolved_files(
-                    mor_data, mor_tombs, schema, n_buckets, khash_in=all_hs, meta=meta
-                )
-            )
-        if not parts:
+        df = self._live_rows(meta, files, n_buckets, khash_in=all_hs)
+        if df is None:
             return self.spark.createDataFrame([], schema)
-        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         hit = df.join(F.broadcast(kdf.select(*KEY_COLS)), KEY_COLS, "left_semi")
         return hit.select(*[f.name for f in schema.fields])
 

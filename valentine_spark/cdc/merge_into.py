@@ -62,7 +62,6 @@ front door.
 from __future__ import annotations
 
 import json
-import os
 from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, Observation
@@ -166,8 +165,6 @@ class MergeIntoBuilder:
         this call — same guidance as ``wal.py``'s decoders; cheap sources
         (parquet slices, generated frames) recompute faster than they
         cache, so no persist is taken here by default."""
-        from .lake import CommitConflictError, _BODY_ATTEMPTS, _bump
-
         if not self._clauses:
             raise ValueError("MERGE INTO requires at least one WHEN clause")
         lake = self._lake
@@ -223,25 +220,10 @@ class MergeIntoBuilder:
                     "source, e.g. with lww_dedup, or pass assume_unique=True "
                     "if uniqueness is guaranteed upstream)"
                 )
-        last: Optional[Exception] = None
-        for _ in range(_BODY_ATTEMPTS):
-            try:
-                return self._execute_once(batch_id)
-            except CommitConflictError as e:
-                _bump("body_retries")
-                last = e
-        raise last
+        return lake._retry_body(lambda: self._execute_once(batch_id))
 
     def _execute_once(self, batch_id: Optional[str]) -> dict:
-        from .lake import (
-            BUCKET_COL,
-            KHASH_COL,
-            _bloom_opts,
-            _entry_seq,
-            _uid,
-            bucket_expr,
-            khash_expr,
-        )
+        from .lake import BUCKET_COL, KHASH_COL, bucket_expr, khash_expr
 
         lake = self._lake
         meta = lake.metadata()
@@ -269,33 +251,22 @@ class MergeIntoBuilder:
         )
         files = lake._bucket_files(meta)
         dirty = meta.get("dirty", {})
-        rewrite_paths: List[str] = []
-        mor_data: List[Tuple[str, int]] = []
-        mor_tombs: List[Tuple[str, int]] = []
-        carry: Dict[int, List[dict]] = {}
-        touched: set = set()
         if scans_by_source:
             # every target row is evaluated: all buckets touched, nothing
             # carried (a by-source clause may mutate any row)
-            for b, entries in files.items():
-                touched.add(b)
-                if str(b) in dirty:
-                    for e in entries:
-                        (mor_tombs if e.get("kind") == "tomb" else mor_data).append(
-                            (e["path"], _entry_seq(e))
-                        )
-                else:
-                    rewrite_paths.extend(
-                        (e["path"], _entry_seq(e))
-                        for e in entries
-                        if e.get("kind") != "tomb"
-                    )
+            read = {
+                b: es if str(b) in dirty else [e for e in es if e.get("kind") != "tomb"]
+                for b, es in files.items()
+            }
+            carry: Dict[int, List[dict]] = {}
         else:
             # every clean bucket's files enter the range cut directly — the
             # cut joins on bucket equality, so entries outside the source's
             # bucket set fall out of phase 1 for free, and skipping the
             # separate distinct-source-buckets job removes one whole Spark
-            # job from the per-commit fixed adder (BENCH §2i)
+            # job from the per-commit fixed adder (BENCH §2i).  Clean-bucket
+            # tombstones are no candidates and drop out of rewritten
+            # buckets' manifests (see LakeTable._live_rows).
             flat_entries = [
                 (b, e)
                 for b, entries in files.items()
@@ -309,42 +280,19 @@ class MergeIntoBuilder:
                 if flat_entries
                 else set()
             )
-            for i in sorted(touched_ids):
-                b, e = flat_entries[i]
-                touched.add(b)
-                rewrite_paths.append((e["path"], _entry_seq(e)))
-            for b in touched:  # carried = the bucket's untouched entries
-                keep = [
-                    e
-                    for j, (bb, e) in enumerate(flat_entries)
-                    if bb == b and j not in touched_ids
-                ]
-                # tombstones in a clean bucket name never-present keys; they
-                # are dropped from rewritten buckets (same as merge/compact)
-                carry[b] = keep
+            read = {}
+            carry = {}
+            for i, (b, e) in enumerate(flat_entries):
+                (read if i in touched_ids else carry).setdefault(b, []).append(e)
             # every dirty bucket resolves in-flight: matched-ness cannot be
             # evaluated against multi-version state, and whether a source
             # key lives there is unknowable without a job — resolving
             # unconditionally trades a rare extra fold (dirty buckets are
             # bounded by the compaction policy) for the removed job above
-            for b in files:
-                if str(b) in dirty:
-                    touched.add(b)
-                    for e in files.get(b, []):
-                        (mor_tombs if e.get("kind") == "tomb" else mor_data).append(
-                            (e["path"], _entry_seq(e))
-                        )
+            read.update((b, es) for b, es in files.items() if str(b) in dirty)
 
-        parts: List[DataFrame] = []
-        if rewrite_paths:
-            parts.append(lake._read_files(rewrite_paths, schema, n_buckets, meta=meta))
-        if mor_data or mor_tombs:
-            parts.append(
-                lake._resolved_files(mor_data, mor_tombs, schema, n_buckets, meta=meta)
-            )
-        if parts:
-            target = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        else:
+        target = lake._live_rows(meta, read, n_buckets)
+        if target is None:
             empty = T.StructType(
                 list(schema.fields)
                 + [T.StructField(BUCKET_COL, T.LongType()), T.StructField(KHASH_COL, T.LongType())]
@@ -356,25 +304,15 @@ class MergeIntoBuilder:
             defaults=lake.column_defaults(meta),
         )
 
-        rel_dir = os.path.join("data", f"c-{_uid()}")
-        out_dir = os.path.join(lake.root, rel_dir)
         # write partition count: inserts can land in ANY bucket (their
         # bucket set is unknown without a job), so size to the table's
         # bucket count — the same parallelism a full-bucket write uses
-        (
-            out.repartition(max(meta["n_buckets"], 1), F.col(BUCKET_COL))
-            .sortWithinPartitions(BUCKET_COL, KHASH_COL)
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", meta.get("target_file_rows", 1_000_000))
-            .options(**_bloom_opts(meta))
-            .partitionBy(BUCKET_COL)
-            .parquet(out_dir)
-        )
+        new_files = lake._write_buckets(out, meta, max(meta["n_buckets"], 1))
         counts = {k: int(v or 0) for k, v in obs.get.items()}
-        new_files = lake._new_file_stats(out_dir, rel_dir, stats_cols=meta.get("stats_cols"))
 
-        read_meta = meta
-        entry_base = {
+        rewritten = [e for es in read.values() for e in es]
+        tombs = sum(1 for e in rewritten if e.get("kind") == "tomb")
+        entry = {
             "mutation": "merge_into",
             "clauses": [
                 {"branch": b, "kind": k, "conditional": c is not None}
@@ -389,19 +327,22 @@ class MergeIntoBuilder:
             "rows_inserted": sum(
                 counts[n] for n, (b, k) in action_names.items() if k == "insert"
             ),
-            "files_rewritten": len(rewrite_paths) + len(mor_data),
+            "files_rewritten": len(rewritten) - tombs,
             # dirty-bucket tombstone files consumed by the in-flight
             # resolution — separate so rewrite-amplification audits see the
             # full file count without changing files_rewritten's meaning
             # (data files only, consistent with merge/mutate lineage)
-            "tomb_files_resolved": len(mor_tombs),
+            "tomb_files_resolved": tombs,
         }
+        if batch_id is not None:
+            entry["batch_id"] = batch_id
         # manifests change for: buckets whose files were rewritten/resolved
-        # (``touched`` — kept entries carried, rewritten ones replaced) and
+        # (``read`` — carried entries kept, rewritten ones replaced) and
         # buckets that only gained an insert file (existing entries kept,
         # new file appended — khash-sound pruning guarantees the inserted
         # keys live in no existing file, so the bucket stays single-version)
-        write_touched = sorted(touched | set(new_files))
+        write_touched = sorted(set(read) | set(new_files))
+        carried = {b: (carry.get(b, []) if b in read else files.get(b, [])) for b in write_touched}
         # rebase validation must cover the full PROBE set, not just the
         # buckets we wrote: a source key that matched nothing at read time
         # touches no file, but a concurrent insert of that key means this
@@ -415,54 +356,19 @@ class MergeIntoBuilder:
         # concurrently, so its probe set is the whole layout.
         probe_cache: Dict[str, List[int]] = {}
 
-        def _probe_buckets() -> List[int]:
+        def read_set() -> List[int]:
             if "b" not in probe_cache:
                 if scans_by_source:
                     probe_cache["b"] = list(range(n_buckets))
                 else:
                     rows = src.select(BUCKET_COL).distinct().collect()
                     probe_cache["b"] = [int(r[0]) for r in rows]
-            return probe_cache["b"]
+            return sorted(set(write_touched) | set(probe_cache["b"]))
 
-        def build(base: dict):
-            if base is not read_meta:
-                lake._validate_base(
-                    read_meta, base,
-                    sorted(set(write_touched) | set(_probe_buckets())),
-                    batch_id,
-                )
-            new_version = base["version"] + 1
-            entry = {**entry_base, "version": new_version}
-            if batch_id is not None:
-                entry["batch_id"] = batch_id
-            bucket_map = dict(base["buckets"])
-            d = dict(base.get("dirty", {}))
-            manifest_buckets: Dict[str, List[dict]] = {}
-            for b in write_touched:
-                if b in touched:
-                    kept = list(carry.get(b, []))
-                else:  # insert-only bucket: every existing live entry stays
-                    kept = list(files.get(b, []))
-                d.pop(str(b), None)  # rewritten/resolved buckets are clean now
-                entries = kept + [
-                    {**e, "seq": new_version} for e in new_files.get(b, [])
-                ]
-                if entries:
-                    manifest_buckets[str(b)] = entries
-                else:  # every row of the bucket was deleted
-                    bucket_map.pop(str(b), None)
-            segments: List[Tuple[str, dict]] = []
-            if manifest_buckets:
-                manifest_rel = f"metadata/m-{new_version}-{_uid()}.json"
-                for b in manifest_buckets:
-                    bucket_map[b] = manifest_rel
-                segments.append((manifest_rel, {"buckets": manifest_buckets}))
-            new_meta = lake._advance_meta(
-                base, new_version, entry, bucket_map, segments, None, batch_id, dirty=d
-            )
-            return new_meta, segments, entry
-
-        return lake._commit_loop(read_meta, build)
+        return lake._commit_buckets(
+            meta, entry, write_touched, new_files, read_set=read_set,
+            carry=carried, batch_id=batch_id,
+        )
 
     # -- clause compilation ------------------------------------------------
 

@@ -63,7 +63,7 @@ from typing import Dict, NamedTuple, Optional
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .apply import apply_batch
+from .apply import _occupied_slices, apply_batch
 from .lake import LakeTable
 from .wal import CORRUPT_COL, DecodedStream, decode_debezium, decode_maxwell
 
@@ -314,7 +314,7 @@ def replay_routed(
     not stability.
 
     Only OCCUPIED slices are walked: one small per-table aggregation
-    (``lsn DIV batch_lsns`` -> per-slice max) replaces the old min/max
+    (``floor(lsn / batch_lsns)`` -> per-slice max) replaces the old min/max
     bounds job, and the loop iterates exactly the union of occupied slice
     keys.  Maxwell LSNs are file-packed (``fileno * 2**40 + offset``,
     cdc/wal.py::maxwell_position_lsn), so a stream spanning two binlog
@@ -354,16 +354,9 @@ def replay_routed(
         # (rows = occupied slices, never events); also materializes the
         # cache.  Union of keys drives the walk; per-table membership
         # drives skip_empty.
-        per_table: Dict[str, Dict[int, int]] = {}
-        for name, df in streams.items():
-            occ = (
-                df.groupBy(F.expr(f"lsn DIV {int(batch_lsns)}").alias("_k"))
-                .agg(F.max("lsn").alias("_mx"))
-                .collect()
-            )
-            per_table[name] = {
-                int(r["_k"]): int(r["_mx"]) for r in occ if r["_k"] is not None
-            }
+        per_table = {
+            name: _occupied_slices(df, batch_lsns) for name, df in streams.items()
+        }
         keys = sorted(set().union(*per_table.values())) if per_table else []
         if not keys:
             return ([], routed) if return_routed else []

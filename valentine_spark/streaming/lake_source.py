@@ -90,6 +90,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from valentine_spark.cdc.lake import _latest_snapshot_version
+
 # key columns of the lake's table model (kept literal here: read() must not
 # depend on driver-only state, and the generator module is driver-side)
 _KEY_COLS = ["repo", "path", "commit"]
@@ -105,20 +107,7 @@ def _read_meta(root: str, version: Optional[int] = None, ref: str = "main") -> d
         else os.path.join(root, "metadata", "refs", ref)
     )
     if version is None:
-        # CURRENT is a hint: a committer can crash (or lag) between
-        # publishing v{N}.json and advancing the pointer — walk forward to
-        # the newest contiguous snapshot, mirroring LakeTable._latest_version
-        # (including its bootstrap fallback: create() can die after
-        # publishing v0.json but before the first CURRENT write)
-        try:
-            with open(os.path.join(meta_dir, "CURRENT")) as fh:
-                version = int(fh.read().strip())
-        except FileNotFoundError:
-            if not os.path.exists(os.path.join(meta_dir, "v0.json")):
-                raise
-            version = 0
-        while os.path.exists(os.path.join(meta_dir, f"v{version + 1}.json")):
-            version += 1
+        version = _latest_snapshot_version(meta_dir)
     path = os.path.join(meta_dir, f"v{version}.json")
     if not os.path.exists(path):
         raise RuntimeError(
