@@ -121,9 +121,12 @@ def materialize(df) -> int:
     return 0
 
 
-def run_queries(spark: SparkSession, sf_dir: str) -> dict:
+def run_queries(spark: SparkSession, sf_dir: str) -> tuple[dict, dict]:
+    """Times every bench query; returns ``(timings, small_sf)`` where
+    ``small_sf`` holds only the SMALL_SF_QUERIES substitutions actually
+    made (a query whose sibling SF dir is missing runs at ``sf_dir``)."""
     queries = entry_mod.queries()
-    timings = {}
+    timings, small_sf = {}, {}
     for name in BENCH_QUERIES:
         fn = queries[name]
         run_dir = sf_dir
@@ -131,10 +134,11 @@ def run_queries(spark: SparkSession, sf_dir: str) -> dict:
             cand = os.path.join(os.path.dirname(sf_dir.rstrip("/")), SMALL_SF_QUERIES[name])
             if os.path.isdir(cand):
                 run_dir = cand
+                small_sf[name] = SMALL_SF_QUERIES[name]
         t0 = time.time()
         materialize(fn(spark, run_dir))
         timings[name] = round(time.time() - t0, 3)
-    return timings
+    return timings, small_sf
 
 
 def run_cdc_replay(spark: SparkSession, n_events: int, n_buckets: int = 64) -> dict:
@@ -204,7 +208,7 @@ def main() -> None:
         materialize(entry_mod.queries()["q1_pricing_summary"](spark, sf_dir))
 
         t0 = time.time()
-        timings = run_queries(spark, sf_dir)
+        timings, small_sf = run_queries(spark, sf_dir)
         suite_wall = round(time.time() - t0, 3)
 
         extras = {}
@@ -234,9 +238,10 @@ def main() -> None:
             # out on a loaded host and every timing above is suspect — compare
             # against the pinned quiet-window artifacts in BENCH/ instead
             "host_contaminated": contaminated,
-            # capped rows run at a smaller SF than the headline (see
-            # SMALL_SF_QUERIES); their timing is NOT comparable to rounds <= 4
-            "small_sf_queries": SMALL_SF_QUERIES,
+            # capped rows that actually ran at a smaller SF than the
+            # headline (see SMALL_SF_QUERIES); their timing is NOT
+            # comparable to rounds <= 4
+            "small_sf_queries": small_sf,
             **extras,
         }
         print(json.dumps(result))

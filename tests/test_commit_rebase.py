@@ -30,7 +30,6 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-import valentine_spark.cdc.lake as lake_mod
 from valentine_spark.cdc import CommitConflictError, LakeTable
 from valentine_spark.cdc.lake import bucket_expr
 
@@ -211,20 +210,40 @@ def test_interleaved_commit_rebases_or_reruns(
     shutil.copytree(src_root, root)
     lake = LakeTable(root, spark)
     other = LakeTable(root, spark)
+    # install_retries: lost snapshot installs; body_retries: re-runs of an
+    # operation's body beyond its first call
     stats: dict = {}
-    monkeypatch.setattr(lake_mod, "CONFLICT_STATS", stats)
+
+    def bump(key):
+        stats[key] = stats.get(key, 0) + 1
 
     run_other, other_oracle = _interleaved(keys_by_bucket, where)
     real_install = LakeTable._try_install_snapshot
+    real_retry_body = LakeTable._retry_body
     fired = []
 
     def install(self, meta):
         if self is lake and not fired:
             fired.append(meta["version"])
             run_other(other, spark)
-        return real_install(self, meta)
+        installed = real_install(self, meta)
+        if not installed:
+            bump("install_retries")
+        return installed
+
+    def retry_body(self, body):
+        calls = []
+
+        def counted():
+            if calls and self is lake:
+                bump("body_retries")
+            calls.append(1)
+            return body()
+
+        return real_retry_body(self, counted)
 
     monkeypatch.setattr(LakeTable, "_try_install_snapshot", install)
+    monkeypatch.setattr(LakeTable, "_retry_body", retry_body)
     run, oracle = OPS[op]
     if body_retries is None:
         with pytest.raises(CommitConflictError):

@@ -111,7 +111,6 @@ def apply_batch(
     matcher=None,
     n_salts: int = 1,
     drift_threshold: float = 0.5,
-    cache_batch: bool = False,
     watermark_lsn: Optional[int] = None,
     collect_metrics: bool = False,
     mode: Optional[str] = None,
@@ -138,106 +137,92 @@ def apply_batch(
 
     events, drift_map, drift_stages = resolve_drift(events, lake, matcher=matcher, threshold=drift_threshold)
 
-    # The batch slice is scanned three times (watermarks, LWW, merge).
-    # cache_batch=True materializes it once — worth it when the source
-    # re-read is expensive (remote Kafka/object store); for cheap re-scans
-    # (pushdown parquet slices, generated streams) recompute wins, so the
-    # default is off.  Measured on the synthetic stream: caching was ~35%
-    # SLOWER (materializing ~600B/row content vs recomputing hash exprs).
-    from pyspark import StorageLevel
-
     from .lake import BucketLayoutChangedError
 
-    if cache_batch:
-        events = events.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        winners = lww_dedup(events, n_salts=n_salts)
+    winners = lww_dedup(events, n_salts=n_salts)
 
-        def _bucket_hints(n_buckets: int):
-            if watermark_lsn is not None:
-                # lsn-range batch: all buckets advance to the range top;
-                # merge treats every bucket as changed (no stats job).
-                changed = list(range(n_buckets))
-                return changed, {b: int(watermark_lsn) for b in changed}
-            # ONE small job over the (already-shuffled) winner set yields
-            # both the changed-bucket list and the per-bucket watermarks.
-            # Watermarks from winners can under-report vs the raw batch max
-            # (a losing event's lsn may exceed its key's winner) —
-            # under-reporting is SAFE: resume re-applies those events and
-            # LWW+MERGE are idempotent on them.
-            wms = batch_watermarks(winners, n_buckets)
-            return sorted(wms), wms
+    def _bucket_hints(n_buckets: int):
+        if watermark_lsn is not None:
+            # lsn-range batch: all buckets advance to the range top;
+            # merge treats every bucket as changed (no stats job).
+            changed = list(range(n_buckets))
+            return changed, {b: int(watermark_lsn) for b in changed}
+        # ONE small job over the (already-shuffled) winner set yields
+        # both the changed-bucket list and the per-bucket watermarks.
+        # Watermarks from winners can under-report vs the raw batch max
+        # (a losing event's lsn may exceed its key's winner) —
+        # under-reporting is SAFE: resume re-applies those events and
+        # LWW+MERGE are idempotent on them.
+        wms = batch_watermarks(winners, n_buckets)
+        return sorted(wms), wms
 
-        # ONE snapshot read for the bucket count, the column list, the
-        # types AND the defaults: per-column dict_of_types(lake) calls
-        # would re-parse the snapshot JSON N times AND could observe a
-        # different snapshot than the column list (a concurrent rename
-        # landing between reads -> KeyError; a racing rebucket is caught by
-        # merge's own BucketLayoutChangedError path)
-        snap = lake.metadata()
-        n_buckets = snap["n_buckets"]
-        changed, wms = _bucket_hints(n_buckets)
+    # ONE snapshot read for the bucket count, the column list, the
+    # types AND the defaults: per-column dict_of_types(lake) calls
+    # would re-parse the snapshot JSON N times AND could observe a
+    # different snapshot than the column list (a concurrent rename
+    # landing between reads -> KeyError; a racing rebucket is caught by
+    # merge's own BucketLayoutChangedError path)
+    snap = lake.metadata()
+    n_buckets = snap["n_buckets"]
+    changed, wms = _bucket_hints(n_buckets)
 
-        target_fields = T.StructType.fromJson(json.loads(snap["schema"])).fields
-        types = {f.name: f.dataType for f in target_fields}
-        # write defaults: a batch that omits an evolved column fills with
-        # the column's default (evolve_schema(defaults=...)), NULL otherwise
-        dflts = lake.column_defaults(snap)
-        upsert_cols = [
-            F.col(c)
-            if c in winners.columns
-            else F.lit(dflts.get(c)).cast(types[c]).alias(c)
-            for c in (f.name for f in target_fields)
-        ]
-        upserts = winners.where(F.col("op") != "delete").select(*upsert_cols)
-        deletes = winners.where(F.col("op") == "delete").select(*KEY_COLS)
+    target_fields = T.StructType.fromJson(json.loads(snap["schema"])).fields
+    types = {f.name: f.dataType for f in target_fields}
+    # write defaults: a batch that omits an evolved column fills with
+    # the column's default (evolve_schema(defaults=...)), NULL otherwise
+    dflts = lake.column_defaults(snap)
+    upsert_cols = [
+        F.col(c)
+        if c in winners.columns
+        else F.lit(dflts.get(c)).cast(types[c]).alias(c)
+        for c in (f.name for f in target_fields)
+    ]
+    upserts = winners.where(F.col("op") != "delete").select(*upsert_cols)
+    deletes = winners.where(F.col("op") == "delete").select(*KEY_COLS)
 
-        lineage: dict = {}
-        if drift_map:
-            lineage["drift_mapping"] = drift_map
-            lineage["drift_stages"] = drift_stages  # which matcher stage decided each rename
-        if collect_metrics:
-            # one small agg over the (shuffle-reused) winner set; opt-in so
-            # the bulk-replay hot path stays at one job per batch
-            m = winners.agg(
-                F.sum(F.when(F.col("op") != "delete", 1).otherwise(0)).alias("upserts"),
-                F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("deletes"),
-                F.count(F.lit(1)).alias("keys_touched"),
-            ).collect()[0]
-            lineage["metrics"] = {
-                "upserts": int(m["upserts"] or 0),
-                "deletes": int(m["deletes"] or 0),
-                "keys_touched": int(m["keys_touched"] or 0),
-            }
-        while True:
-            try:
-                return lake.merge(
-                    upserts,
-                    deletes,
-                    batch_id,
-                    batch_watermarks=wms,
-                    lineage=lineage,
-                    changed_buckets=changed,
-                    mode=mode,
-                    # raw batch keys = the winners' key set, recomputable by
-                    # a column-pruned source scan instead of an LWW
-                    # reduction — the pruning and anti-join jobs use this
-                    # (see LakeTable.merge)
-                    touched_hint=events,
-                    # bucket ids above are relative to THIS layout; merge
-                    # raises BucketLayoutChangedError instead of silently
-                    # honoring them if a rebucket() replaced it in between
-                    hint_n_buckets=n_buckets,
-                )
-            except BucketLayoutChangedError:
-                # recompute the layout-relative hints against the new
-                # layout and retry; bounded in practice by how often a
-                # maintenance rebucket can land mid-batch
-                n_buckets = lake.metadata()["n_buckets"]
-                changed, wms = _bucket_hints(n_buckets)
-    finally:
-        if cache_batch:
-            events.unpersist()
+    lineage: dict = {}
+    if drift_map:
+        lineage["drift_mapping"] = drift_map
+        lineage["drift_stages"] = drift_stages  # which matcher stage decided each rename
+    if collect_metrics:
+        # one small agg over the (shuffle-reused) winner set; opt-in so
+        # the bulk-replay hot path stays at one job per batch
+        m = winners.agg(
+            F.sum(F.when(F.col("op") != "delete", 1).otherwise(0)).alias("upserts"),
+            F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("deletes"),
+            F.count(F.lit(1)).alias("keys_touched"),
+        ).collect()[0]
+        lineage["metrics"] = {
+            "upserts": int(m["upserts"] or 0),
+            "deletes": int(m["deletes"] or 0),
+            "keys_touched": int(m["keys_touched"] or 0),
+        }
+    while True:
+        try:
+            return lake.merge(
+                upserts,
+                deletes,
+                batch_id,
+                batch_watermarks=wms,
+                lineage=lineage,
+                changed_buckets=changed,
+                mode=mode,
+                # raw batch keys = the winners' key set, recomputable by
+                # a column-pruned source scan instead of an LWW
+                # reduction — the pruning and anti-join jobs use this
+                # (see LakeTable.merge)
+                touched_hint=events,
+                # bucket ids above are relative to THIS layout; merge
+                # raises BucketLayoutChangedError instead of silently
+                # honoring them if a rebucket() replaced it in between
+                hint_n_buckets=n_buckets,
+            )
+        except BucketLayoutChangedError:
+            # recompute the layout-relative hints against the new
+            # layout and retry; bounded in practice by how often a
+            # maintenance rebucket can land mid-batch
+            n_buckets = lake.metadata()["n_buckets"]
+            changed, wms = _bucket_hints(n_buckets)
 
 
 def _occupied_slices(stream: DataFrame, batch_lsns: int) -> Dict[int, int]:
@@ -265,7 +250,6 @@ def replay(
     matcher=None,
     n_salts: int = 1,
     max_lsn: Optional[int] = None,
-    range_watermarks: bool = True,
     collect_metrics: bool = False,
     mode: Optional[str] = None,
 ) -> list:
@@ -273,10 +257,9 @@ def replay(
     equivalent of tailing the stream (resumable, exactly-once).  The slice
     filter pushes down to the stream source scan.
 
-    ``range_watermarks=True`` (default): each slice is a complete LSN range,
-    so the commit advances every bucket's watermark to the slice top and
-    skips the per-bucket stats job (see apply_batch).  Set False for
-    independently-progressing partitioned sources.
+    Each slice is a complete LSN range, so the commit advances every
+    bucket's watermark to the slice top and skips the per-bucket stats job
+    (see apply_batch's ``watermark_lsn``).
 
     Only OCCUPIED slices are applied: one small aggregation
     (``floor(lsn / batch_lsns)`` -> per-slice max) yields the slice keys, and
@@ -311,7 +294,7 @@ def replay(
                 f"{batch_id_prefix}-{lo}-{hi}",
                 matcher=matcher,
                 n_salts=n_salts,
-                watermark_lsn=min(hi - 1, data_max) if range_watermarks else None,
+                watermark_lsn=min(hi - 1, data_max),
                 collect_metrics=collect_metrics,
                 mode=mode,
             )
@@ -429,8 +412,7 @@ def snapshot_then_stream(
     The apply-relevant keywords (``mode``, ``matcher``, ``n_salts``) are
     forwarded to BOTH legs, so e.g. ``mode="mor"`` applies the bootstrap
     batch and the tail the same way; replay-only keywords
-    (``range_watermarks``, ``collect_metrics``, ...) go to the tail
-    alone."""
+    (``collect_metrics``, ``max_lsn``, ...) go to the tail alone."""
     boot_kw = {k: replay_kw[k] for k in ("mode", "matcher", "n_salts") if k in replay_kw}
     boot = bootstrap_snapshot(
         lake, snapshot, snapshot_lsn, batch_id=snapshot_batch_id, **boot_kw

@@ -54,7 +54,7 @@ from typing import Callable, List, Optional
 from pyspark.sql import DataFrame, functions as F
 
 from .generator import KEY_COLS
-from .lake import LakeTable
+from .lake import LakeTable, _churned_buckets
 
 
 class SnapshotExpiredError(RuntimeError):
@@ -290,16 +290,7 @@ class ChangelogFollower:
         )
         return Delivery(
             df, pos, current, self.consumer_id,
-            # same diff as changed_buckets_between, over the endpoint metas
-            # already in hand (no re-read on the per-poll serial path)
-            changed_buckets=(
-                None if crossed
-                else sorted(
-                    int(b)
-                    for b in set(meta_to["buckets"]) | set(meta_from["buckets"])
-                    if meta_from["buckets"].get(b) != meta_to["buckets"].get(b)
-                )
-            ),
+            changed_buckets=None if crossed else _churned_buckets(meta_from, meta_to),
             source_n_buckets=to_n,
             schema_changes=changes,
             column_defaults=self.lake.column_defaults(meta_to) or None,

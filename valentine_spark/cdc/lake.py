@@ -53,7 +53,7 @@ key-hash-clustered (sortWithinPartitions + maxRecordsPerFile), and the
 manifest records each file's (min,max) khash from its parquet footer.  A
 MERGE broadcast-joins the batch's touched keys against the file ranges and
 rewrites ONLY intersecting files — rewrite bytes scale with touched keys,
-not bucket count × bucket size (measured: BENCH/merge_prune_bench.py).
+not bucket count × bucket size (measured: BENCH/merge_prune.json).
 Inserts append new files (ranges may overlap older files; pruning uses
 interval intersection, so overlap costs read amplification only —
 ``compact()`` re-sorts a bucket back to disjoint files).
@@ -70,7 +70,7 @@ max-by-(commit-version, liveness) aggregation (older upserts lose, later
 tombstones kill, clean buckets stay scan-only), and ``compact()`` folds a
 dirty bucket back to single-version clean files.  Modes mix safely: a COW
 merge touching a dirty bucket resolves it first (see ``merge``).  The
-COW/MoR crossover is measured in BENCH/merge_prune_bench.py.
+COW/MoR crossover is measured in BENCH/merge_prune.json.
 
 Correctness argument for exactly-once: all commit state (which batches are
 applied, watermarks, live files) lives in ONE metadata file published with
@@ -124,26 +124,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from .generator import KEY_COLS
-
-# Bench hook (see BENCH/scaling_run.py): when set to a list, merge() appends
-# ("<label>", seconds) for its phases — "merge_prune" (touched-file
-# discovery), "merge_write" (the distributed read+anti-join+write job) and
-# "commit_io" (driver-side manifest/snapshot JSON) — so the scaling harness
-# can decompose wall time into the parallel part and the per-batch serial
-# driver part for the Amdahl analysis.
-MERGE_TIMINGS: Optional[list] = None
-
-# Concurrency observability hook (same pattern as MERGE_TIMINGS): when set
-# to a dict, commit machinery increments "install_retries" (lost
-# put-if-absent races that REBASED — cheap, no Spark re-work for MoR) and
-# "body_retries" (conflicts that re-ran an operation's Spark body).  The
-# concurrent-writer bench reads these to report protocol overhead.
-CONFLICT_STATS: Optional[dict] = None
-
-
-def _bump(key: str) -> None:
-    if CONFLICT_STATS is not None:
-        CONFLICT_STATS[key] = CONFLICT_STATS.get(key, 0) + 1
 
 BUCKET_COL = "_bucket"
 KHASH_COL = "_khash"
@@ -275,17 +255,6 @@ def _next_field_id(meta: dict, fids: Dict[str, int], log: List[list]) -> int:
     return max(used, default=-1) + 1
 
 
-def _era_names(log: List[list], seq: int) -> Dict[str, str]:
-    """id_str -> physical column name for a file committed at ``seq``."""
-    cur = log[0][1]
-    for v, names in log:
-        if v <= seq:
-            cur = names
-        else:
-            break
-    return cur
-
-
 def _era_colmap(
     fids: Dict[str, int], log: List[list], seq: int
 ) -> Optional[Dict[str, Optional[str]]]:
@@ -294,7 +263,7 @@ def _era_colmap(
     under a fresh id, after the file was written; reading the same-named
     stale physical data would resurrect it).  Returns None for the identity
     mapping (fast path)."""
-    era = _era_names(log, seq)
+    era = log[_era_index(log, seq)][1]
     m = {cur: era.get(str(i)) for cur, i in fids.items()}
     if all(phys == cur for cur, phys in m.items()):
         return None
@@ -308,6 +277,46 @@ def _era_index(log: List[list], seq: int) -> int:
         if v <= seq:
             idx = i
     return idx
+
+
+def _churned_buckets(meta_from: dict, meta_to: dict) -> List[int]:
+    """Buckets whose manifest pointer differs between two snapshot metas
+    (see ``LakeTable.changed_buckets_between``)."""
+    return sorted(
+        int(b)
+        for b in set(meta_to["buckets"]) | set(meta_from["buckets"])
+        if meta_from["buckets"].get(b) != meta_to["buckets"].get(b)
+    )
+
+
+def _era_preds(meta: dict, preds: List[tuple]):
+    """Per-era predicate translation for bounds pruning: returns
+    ``fn(seq) -> preds`` with each column name rewritten to the name the
+    column's FIELD ID was stored under in the file's era.  Bounds in
+    manifests are keyed by physical (write-time) names, so after a rename a
+    current-name lookup could hit a STALE same-named entry from a different
+    field and mis-prune (the rename-into-reused-name hazard); translating by
+    id always finds the right entry.  A predicate on a field id the era
+    lacks is dropped for that era (unbounded — never prunes; the residual
+    filter keeps exactness)."""
+    log = meta.get("schema_log")
+    if not log or len(log) <= 1:
+        return lambda seq: preds
+    fids, log = _field_meta(meta)
+    cache: Dict[int, List[tuple]] = {}
+
+    def fn(seq: int) -> List[tuple]:
+        idx = _era_index(log, seq)
+        if idx not in cache:
+            era = log[idx][1]
+            cache[idx] = [
+                (era[str(fids[col])], op, val)
+                for col, op, val in preds
+                if col in fids and str(fids[col]) in era
+            ]
+        return cache[idx]
+
+    return fn
 
 
 def _parse_dt(type_json: str) -> T.DataType:
@@ -678,7 +687,6 @@ class LakeTable:
                 self._write_json_atomic(rel, payload)
             if self._try_install_snapshot(new_meta):
                 return result
-            _bump("install_retries")
             meta = self.metadata()
         raise CommitConflictError(
             f"lost the snapshot install race {_INSTALL_ATTEMPTS} times at "
@@ -694,7 +702,6 @@ class LakeTable:
             try:
                 return body()
             except CommitConflictError as e:
-                _bump("body_retries")
                 last = e
         raise last
 
@@ -1060,39 +1067,6 @@ class LakeTable:
             preds.append((col, op, val))
         return preds
 
-    def _era_preds(self, meta: dict, preds: List[tuple]):
-        """Per-era predicate translation for bounds pruning: returns
-        ``fn(seq) -> preds`` with each column name rewritten to the name
-        the column's FIELD ID was stored under in the file's era.  Bounds
-        in manifests are keyed by physical (write-time) names, so after a
-        rename a current-name lookup could hit a STALE same-named entry
-        from a different field and mis-prune (the rename-into-reused-name
-        hazard); translating by id always finds the right entry.  A
-        predicate on a field id the era lacks is dropped for that era
-        (unbounded — never prunes; the residual filter keeps exactness)."""
-        log = meta.get("schema_log")
-        if not log or len(log) <= 1:
-            return lambda seq: preds
-        fids, log = _field_meta(meta)
-        cache: Dict[int, List[tuple]] = {}
-
-        def fn(seq: int) -> List[tuple]:
-            idx = 0
-            for i, (v, _) in enumerate(log):
-                if v <= seq:
-                    idx = i
-            if idx not in cache:
-                era = log[idx][1]
-                out = []
-                for col, op, val in preds:
-                    phys = era.get(str(fids[col]))
-                    if phys is not None:
-                        out.append((phys, op, val))
-                cache[idx] = out
-            return cache[idx]
-
-        return fn
-
     def _prune_for_scan(
         self, meta: dict, preds: List[tuple], buckets: Optional[List[int]]
     ) -> Tuple[Dict[int, List[dict]], int, int]:
@@ -1108,7 +1082,7 @@ class LakeTable:
         fully and filter after."""
         files = self._bucket_files(meta, buckets)
         dirty = meta.get("dirty", {})
-        era_preds = self._era_preds(meta, preds)
+        era_preds = _era_preds(meta, preds)
         out: Dict[int, List[dict]] = {}
         kept = total = 0
         for b, entries in files.items():
@@ -1650,7 +1624,6 @@ class LakeTable:
         if lineage:
             commit.update(lineage)
 
-        _t0 = time.time()
         current_files = self._bucket_files(meta, changed)
         # clean-bucket tombstones (see _live_rows) are no rewrite candidates
         # and drop out of rewritten buckets' manifests
@@ -1678,10 +1651,7 @@ class LakeTable:
             touched_ids = set(self._touched_file_ids(flat_entries, touched_keys))
         else:
             touched_ids = set()
-        if MERGE_TIMINGS is not None:
-            MERGE_TIMINGS.append(("merge_prune", time.time() - _t0))
 
-        _t_write0 = time.time()
         rewrite: Dict[int, List[dict]] = {}
         kept: Dict[int, List[dict]] = {b: [] for b in current_files}
         for i, (b, e) in enumerate(flat_entries):  # one pass, O(n_files)
@@ -1708,8 +1678,6 @@ class LakeTable:
             commit["bytes_written"] = sum(
                 e["bytes"] for es in new_files.values() for e in es
             )
-        if MERGE_TIMINGS is not None:
-            MERGE_TIMINGS.append(("merge_write", time.time() - _t_write0))
 
         # a bucket's live list changed iff one of its files was rewritten
         # or a new file landed in it; every other bucket keeps pointing at
@@ -1717,15 +1685,11 @@ class LakeTable:
         # rewrite O(total files) of manifest entries).  The rewrite's
         # survivors are only valid against the file sets it read: every
         # bucket this merge READ (changed) must be untouched on rebase.
-        _t_io0 = time.time()
-        result = self._commit_buckets(
+        return self._commit_buckets(
             meta, commit, sorted(set(rewrite) | set(new_files)), new_files,
             read_set=changed, carry=kept, batch_id=batch_id,
             batch_watermarks=batch_watermarks,
         )
-        if MERGE_TIMINGS is not None:
-            MERGE_TIMINGS.append(("commit_io", time.time() - _t_io0))
-        return result
 
     def _validate_base(
         self,
@@ -1825,7 +1789,7 @@ class LakeTable:
         max-by-version aggregation and ``compact()`` folds them back to
         single-version clean state.  Write cost is O(batch) always — the
         hot-random-key regime where COW rewrite amplification explodes
-        (BENCH/merge_prune_bench.py measures the crossover).
+        (BENCH/merge_prune.json records the crossover).
 
         A MoR commit reads NO table state, so it rebases freely across
         concurrent commits (its files simply land with a later ``seq``);
@@ -1846,7 +1810,6 @@ class LakeTable:
         if lineage:
             commit.update(lineage)
 
-        _t0 = time.time()
         n_parts = max(len(changed), 1)
         rel_dir = os.path.join("data", f"c-{_uid()}")
         new_files = self._write_buckets(
@@ -1877,16 +1840,9 @@ class LakeTable:
         commit["bytes_written"] = sum(
             e["bytes"] for fs in (new_files, tomb_files) for es in fs.values() for e in es
         )
-        if MERGE_TIMINGS is not None:
-            MERGE_TIMINGS.append(("merge_write", time.time() - _t0))
-
-        _t_io0 = time.time()
-        result = self._install_mor_entries(
+        return self._install_mor_entries(
             meta, new_files, tomb_files, batch_id, commit, batch_watermarks
         )
-        if MERGE_TIMINGS is not None:
-            MERGE_TIMINGS.append(("commit_io", time.time() - _t_io0))
-        return result
 
     def _install_mor_entries(
         self,
@@ -3279,13 +3235,7 @@ class LakeTable:
         mirror's MERGE as ``changed_buckets`` so the sink never runs a
         distributed distinct-buckets job over the delivery — the round-3
         per-poll serial floor's largest component."""
-        meta_to = self.metadata(to_version)
-        meta_from = self.metadata(from_version)
-        return sorted(
-            int(b)
-            for b in set(meta_to["buckets"]) | set(meta_from["buckets"])
-            if meta_from["buckets"].get(b) != meta_to["buckets"].get(b)
-        )
+        return _churned_buckets(self.metadata(from_version), self.metadata(to_version))
 
     def changes(
         self,
@@ -3328,9 +3278,7 @@ class LakeTable:
                 f"from_version {meta_from['version']} is newer than to_version {meta_to['version']}"
             )
         schema = T.StructType.fromJson(json.loads(meta_to["schema"]))
-        buckets = self.changed_buckets_between(
-            meta_from["version"], meta_to["version"]
-        )
+        buckets = _churned_buckets(meta_from, meta_to)
         nonkey = [f.name for f in schema.fields if f.name not in KEY_COLS]
 
         fids_to, _ = _field_meta(meta_to)

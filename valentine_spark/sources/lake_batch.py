@@ -123,10 +123,11 @@ class LakeSnapshotReader(DataSourceReader):
     # -- planning (driver; metadata only) ---------------------------------
 
     def partitions(self) -> List[InputPartition]:
-        from valentine_spark.cdc.lake import _field_meta
+        from valentine_spark.cdc.lake import _entry_seq, _era_preds, _field_meta
 
         meta = self.meta
-        fids, log = _field_meta(meta)
+        fids = _field_meta(meta)[0]
+        era_preds = _era_preds(meta, self._preds)
         dmap = meta.get("column_defaults") or {}
         defaults = {n: dmap[str(i)] for n, i in fids.items() if str(i) in dmap}
         dirty = meta.get("dirty", {})
@@ -145,35 +146,28 @@ class LakeSnapshotReader(DataSourceReader):
                     # a tombstone in a CLEAN bucket only names keys that
                     # were never present — skip (same as LakeTable.read)
                     continue
-                if self._preds and not self._file_may_match(e, fids, log):
+                if self._preds and not self._file_may_match(
+                    e, era_preds(_entry_seq(e))
+                ):
                     continue
                 parts.append(
                     LakeSnapshotPartition(self.root, [e], False, defaults)
                 )
         return parts
 
-    def _file_may_match(self, entry: dict, fids: dict, log: List[list]) -> bool:
-        """Manifest-bounds pruning for one clean data file, with each
-        predicate column translated to the name the column's FIELD ID was
-        written under in the file's era (stats are keyed by physical names;
-        a current-name lookup could hit a stale same-named entry from a
-        different field and mis-prune).  A column the era lacks, or without
-        recorded bounds, never prunes — unbounded is always sound."""
-        from valentine_spark.cdc.lake import _entry_seq, _era_names, _file_may_match
+    @staticmethod
+    def _file_may_match(entry: dict, preds: List[tuple]) -> bool:
+        """Manifest-bounds pruning for one clean data file under ``preds``
+        already translated to the file's era names (``_era_preds``); an
+        ``in`` predicate may match when any of its values may."""
+        from valentine_spark.cdc.lake import _file_may_match
 
-        era = _era_names(log, _entry_seq(entry))
         bounds = entry.get("cols")
-        for col, op, val in self._preds:
-            fid = fids.get(col)
-            phys = era.get(str(fid)) if fid is not None else None
-            if phys is None:
-                continue
+        for col, op, val in preds:
             if op == "in":
-                if not any(
-                    _file_may_match(bounds, [(phys, "=", v)]) for v in val
-                ):
+                if not any(_file_may_match(bounds, [(col, "=", v)]) for v in val):
                     return False
-            elif not _file_may_match(bounds, [(phys, op, val)]):
+            elif not _file_may_match(bounds, [(col, op, val)]):
                 return False
         return True
 
