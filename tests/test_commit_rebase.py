@@ -14,7 +14,9 @@ must hold for each operation:
   then the operation).
 
 A merge-on-read merge reads no bucket, so even a commit into the bucket it
-writes rebases it.
+writes rebases it.  Metadata-only commits (``alter_properties``,
+``rename_column``) re-derive against the winner's snapshot: they rebase
+and never re-run either.
 ``rebucket`` reads the whole table: any interleaved commit invalidates it,
 and the conflict surfaces to the caller, whose re-run then lands.
 
@@ -155,6 +157,22 @@ def _rebucket():
     return run, lambda kb, rows: dict(rows)
 
 
+def _rename_column():
+    def run(lake, spark, kb, rows):
+        lake.rename_column("lang", "language")
+        assert "language" in lake.schema.fieldNames()
+
+    return run, lambda kb, rows: dict(rows)
+
+
+def _alter_properties():
+    def run(lake, spark, kb, rows):
+        lake.alter_properties(set={"owner": "ops"})
+        assert lake.properties() == {"owner": "ops"}
+
+    return run, lambda kb, rows: dict(rows)
+
+
 OPS = {
     "cow_merge": _merge("cow"),
     "mor_merge": _merge("mor"),
@@ -162,6 +180,8 @@ OPS = {
     "delete_where": _delete_where(),
     "merge_into": _merge_into(),
     "rebucket": _rebucket(),
+    "alter_properties": _alter_properties(),
+    "rename_column": _rename_column(),
 }
 
 
@@ -200,6 +220,8 @@ def _interleaved(kb, where):
         ("merge_into", "elsewhere", 0),
         ("merge_into", "same", 1),
         ("rebucket", "elsewhere", None),  # None: the conflict surfaces
+        ("alter_properties", "same", 0),  # metadata-only: re-derives, never re-runs
+        ("rename_column", "same", 0),
     ],
 )
 def test_interleaved_commit_rebases_or_reruns(

@@ -61,6 +61,28 @@ def test_follower_incremental_polls_track_source(spark, tmp_path):
     assert fol.position == src.version
 
 
+def test_poll_reads_each_snapshot_once(spark, tmp_path, monkeypatch):
+    """One poll loads the FROM and the TO snapshot once each: the changelog
+    diff and the delivery's hints share those two reads."""
+    stream = synth_change_stream(spark, 1_000, 200, seed=47)
+    src = LakeTable.create(str(tmp_path / "src"), spark, n_buckets=4)
+    _replay_slices(src, stream, 1_000, 2)
+    current = src.version
+    fol = ChangelogFollower(src, str(tmp_path / "ckpt"))
+    reads = []
+    real_metadata = LakeTable.metadata
+
+    def metadata(self, version=None):
+        meta = real_metadata(self, version)
+        reads.append(meta["version"])
+        return meta
+
+    monkeypatch.setattr(LakeTable, "metadata", metadata)
+    d = fol.poll()
+    assert (d.from_version, d.to_version) == (0, current)
+    assert sorted(reads) == [0, current]
+
+
 def test_crash_between_effect_and_commit_is_exactly_once(spark, tmp_path):
     """Apply the delivery, 'crash' before commit, restart: the re-poll
     reproduces the identical token, the sink dedupes it, state is correct."""

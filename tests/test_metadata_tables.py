@@ -2,7 +2,7 @@
 Iceberg metadata-table analogue): driver-built DataFrames over manifests
 only, cross-checked against the data they describe."""
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from valentine_spark.cdc import LakeTable, apply_batch, synth_change_stream
 
@@ -36,11 +36,20 @@ def test_files_matches_state_and_manifests(spark, tmp_path):
 def test_snapshots_tracks_history_and_expiry(spark, tmp_path):
     lake = _mk(spark, tmp_path / "t")
     lake.rename_column("lang", "language")
+    lake.evolve_schema([T.StructField("stars", T.IntegerType())], "add stars")
+    lake.widen_column("stars", T.LongType())
+    lake.alter_properties(set={"owner": "ingest"})
     s = {r["version"]: r for r in lake.snapshots().collect()}
     assert s[0]["kind"] == "create"
     assert s[1]["kind"] == "merge" and s[1]["batch_id"] == "b1"
-    assert s[3]["kind"] == "rename_column"
     assert s[lake.version]["is_current"]
+    # every metadata-only commit reports its own kind, in both tables
+    want = {3: "rename_column", 4: "schema_evolution", 5: "widen_column",
+            6: "alter_properties"}
+    assert {v: s[v]["kind"] for v in want} == want
+    h = {r["version"]: r["kind"] for r in lake.history().collect()}
+    assert {v: h[v] for v in want} == want
+    assert h[1] == h[2] == "merge"
     lake.expire_snapshots(keep_last=2)
     left = sorted(r["version"] for r in lake.snapshots().collect())
     assert left == [lake.version - 1, lake.version]

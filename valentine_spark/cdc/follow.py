@@ -47,14 +47,13 @@ from __future__ import annotations
 import json
 import os
 import threading
-import uuid
 from dataclasses import dataclass, field
 from typing import Callable, List, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
 from .generator import KEY_COLS
-from .lake import LakeTable, _churned_buckets
+from .lake import LakeTable, _churned_buckets, _latest_snapshot_version, _replace_json
 
 
 class SnapshotExpiredError(RuntimeError):
@@ -176,10 +175,7 @@ class ChangelogFollower:
         return ckpt
 
     def _flush_file(self, ckpt: dict) -> None:
-        tmp = self._ckpt_path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(ckpt, fh)
-        os.replace(tmp, self._ckpt_path)  # atomic on POSIX
+        _replace_json(self._ckpt_path, ckpt)
 
     def _write_ckpt(self, ckpt: dict) -> None:
         self._ckpt_cache = ckpt
@@ -229,20 +225,22 @@ class ChangelogFollower:
         next poll (crash-safe at-least-once; exactly-once with a
         token-idempotent sink)."""
         pos = self.position
-        current = self.lake.version if to_version is None else to_version
+        current = (
+            _latest_snapshot_version(self.lake._meta_dir())
+            if to_version is None
+            else to_version
+        )
         if current <= pos:
             return None
         try:
-            # existence check + changes() + the metadata reads below are all
-            # inside one guard: retention can delete v{pos}.json BETWEEN the
-            # check and any later read (TOCTOU) — a raw FileNotFoundError
-            # escaping here would bypass the resync recovery path in exactly
-            # the lagging-consumer situation it exists for
-            if not os.path.exists(self.lake._meta_path(pos)):
-                raise FileNotFoundError(self.lake._meta_path(pos))
-            df = self.lake.changes(pos, current, include_before=self.include_before)
+            # both snapshot reads are inside one guard: retention can delete
+            # v{pos}.json between the version check and the read — a raw
+            # FileNotFoundError escaping here would bypass the resync
+            # recovery path in exactly the lagging-consumer situation it
+            # exists for.  Each snapshot is read once and handed to the diff.
             meta_to = self.lake.metadata(current)
             meta_from = self.lake.metadata(pos)
+            df = self.lake._changes(meta_from, meta_to, self.include_before)
         except FileNotFoundError:
             if os.path.exists(self.lake._meta_path(current)):
                 # only the FROM endpoint can expire (current is retained);

@@ -82,11 +82,19 @@ is recorded applied.
 
 MULTI-WRITER (optimistic concurrency, the Delta log-store / Iceberg
 catalog-CAS analogue): exactly one writer can publish ``v{N}.json`` (the
-``os.link`` put-if-absent races atomically; on an object store the same
-protocol is a conditional PUT).  A loser re-reads the winner's snapshot and
-REBASES.  Every operation that rewrites buckets (COW and MoR merge,
-compact, delete/update_where, merge_into, rebucket) runs the same
-pipeline: live rows in through ``_live_rows``, staged files out through
+``os.link`` put-if-absent in ``_put_json_if_absent`` races atomically; on
+an object store the same protocol is a conditional PUT).  Every commit that
+advances a snapshot goes through ONE loop, ``LakeTable._commit``: the
+operation supplies only ``change(base, version)`` — its lineage entry, the
+snapshot fields it sets and the immutable files it references — and the
+loop stamps the version, merges watermarks, records the batch id, rolls the
+applied/lineage segments, writes the files and installs the snapshot.  A
+loser re-reads the winner's snapshot and calls ``change`` again, which
+REBASES.  Metadata-only commits (schema evolution, rename/drop/widen,
+properties, restore) re-derive against the winner and never re-run.  Every
+operation that rewrites buckets (COW and MoR merge, compact,
+delete/update_where, merge_into, rebucket) runs the same pipeline: live
+rows in through ``_live_rows``, staged files out through
 ``_write_buckets``, one manifest commit through ``_commit_buckets``, whose
 rebase check is set by what the body read — MoR merges read no table
 state, so their already-staged files simply re-stamp to a later manifest
@@ -98,7 +106,9 @@ retried).  Exactly-once survives the race: a rebase re-checks the batch id
 against the winner's applied set.  ``CURRENT`` is a
 hint, not truth — a committer can die between publishing the snapshot and
 advancing the pointer, so readers walk forward from the hint while the next
-contiguous snapshot file exists.  This makes a background compactor, a
+contiguous snapshot file exists.  Every other metadata file (manifests,
+segments, CURRENT, follower checkpoints) is written whole through
+``_replace_json``'s temp-file rename.  This makes a background compactor, a
 schema-evolving writer, and the ingest replayer safe to run concurrently;
 see tests/test_concurrency.py.
 
@@ -191,8 +201,8 @@ _BODY_ATTEMPTS = 4
 
 class CommitConflictError(RuntimeError):
     """A concurrent commit invalidated this operation's read set (the
-    rebase check in ``LakeTable._commit_buckets``), or ``_commit_loop`` lost
-    the install race more than ``_INSTALL_ATTEMPTS`` times.  MERGE,
+    rebase check in ``LakeTable._commit_buckets``), or ``LakeTable._commit``
+    lost the install race more than ``_INSTALL_ATTEMPTS`` times.  MERGE,
     merge_into, compact and delete/update_where re-run their body against
     the fresh snapshot through ``LakeTable._retry_body``, up to
     ``_BODY_ATTEMPTS`` times; seeing it propagate from them means the table
@@ -213,8 +223,9 @@ class BucketLayoutChangedError(RuntimeError):
 
 
 class _SkipCommit(Exception):
-    """Raised by a commit builder when rebasing discovers the work is
-    already done (the batch id landed via a concurrent writer)."""
+    """Raised by a commit's ``change`` when rebasing discovers the work is
+    already done (the batch id landed via a concurrent writer, or the
+    metadata change is already in place)."""
 
     def __init__(self, result: dict):
         self.result = result
@@ -466,6 +477,22 @@ _STATS_DISTRIBUTE_OVER = 96
 _CONFIRM_DENSITY = 0.5
 
 
+#: lineage-entry marker key -> commit kind (first match wins); entries
+#: with none of these are MERGE commits
+_ENTRY_KINDS = ("schema_evolution", "rename_column", "drop_column", "widen_column",
+                "alter_properties", "compaction", "restore", "rebucket")
+
+
+def _entry_kind(entry: dict) -> str:
+    """The commit kind ``history()`` and ``snapshots()`` report for a
+    lineage entry: its marker key, the mutation (``delete`` / ``update``)
+    for ``delete_where`` / ``update_where``, else ``merge``."""
+    for k in _ENTRY_KINDS:
+        if k in entry:
+            return k
+    return entry.get("mutation", "merge")
+
+
 def bucket_expr(n_buckets: int) -> F.Column:
     """Bucket on (repo, path): spreads hot repos across buckets by path while
     keeping every (repo,path,commit) key in exactly one bucket."""
@@ -532,6 +559,31 @@ def _latest_snapshot_version(meta_dir: str) -> int:
     while os.path.exists(os.path.join(meta_dir, f"v{v + 1}.json")):
         v += 1
     return v
+
+
+def _replace_json(path: str, obj) -> None:
+    """Write ``obj`` as JSON at ``path`` through a temp file renamed over
+    it: readers see the old content or the new, never a torn file."""
+    tmp = path + f".tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
+def _put_json_if_absent(path: str, obj) -> bool:
+    """Publish ``obj`` as JSON at ``path`` unless the name is taken —
+    ``os.link`` fails atomically on an existing target (on an object store
+    the same protocol is a conditional PUT).  False when it was taken."""
+    tmp = path + f".tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+    return True
 
 
 class LakeTable:
@@ -634,60 +686,88 @@ class LakeTable:
         with open(self._meta_path(version)) as fh:
             return json.load(fh)
 
-    def _write_json_atomic(self, rel: str, obj: dict) -> None:
-        path = os.path.join(self.root, rel)
-        tmp = path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(obj, fh)
-        os.replace(tmp, path)
-
     def _try_install_snapshot(self, meta: dict) -> bool:
         """Put-if-absent snapshot install — the commit protocol's only
         synchronization point (the Delta log-store / Iceberg catalog-CAS
-        analogue, expressed with ``os.link`` which fails atomically when the
-        target exists).  Exactly one writer can publish a given version;
-        losers rebase and retry at the next version.  The CURRENT pointer is
+        analogue).  Exactly one writer can publish a given version; losers
+        rebase and retry at the next version.  The CURRENT pointer is
         advanced AFTER the install as a best-effort hint (see
         ``_latest_snapshot_version``); a crash between the two leaves a fully
         committed, discoverable snapshot."""
-        path = self._meta_path(meta["version"])
-        tmp = path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
+        if not _put_json_if_absent(self._meta_path(meta["version"]), meta):
             return False
-        finally:
-            os.unlink(tmp)
-        cur_tmp = self._current_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(cur_tmp, "w") as fh:
-            fh.write(str(meta["version"]))
-        os.replace(cur_tmp, self._current_path())
+        _replace_json(self._current_path(), meta["version"])
         return True
 
-    def _commit_loop(self, base_meta: dict, build) -> dict:
-        """Optimistic-concurrency install loop.  ``build(meta) ->
-        (new_meta, segments, result)`` derives the commit against a base
-        snapshot; on a lost install race the loop re-reads the latest
-        snapshot and rebuilds — ``build`` must therefore VALIDATE that its
-        (already-executed) work is still correct against the new base and
-        raise ``CommitConflictError`` when it is not (the caller then
-        re-runs the whole operation), or ``_SkipCommit`` when a concurrent
-        writer already did it (duplicate batch id).  Segment/manifest files
-        are written before the snapshot referencing them; a loser's files
-        are unreferenced garbage that ``expire_snapshots`` collects."""
-        meta = base_meta
+    def _commit(
+        self,
+        read_meta: dict,
+        change,
+        batch_id: Optional[str] = None,
+        batch_watermarks: Optional[Dict[int, int]] = None,
+    ) -> dict:
+        """The one optimistic-concurrency commit loop: every commit that
+        advances this ref's snapshot chain goes through it.
+
+        ``change(base, version) -> (entry, fields, segments)`` derives the
+        commit against a base snapshot: its lineage entry, the snapshot
+        fields it sets (a ``None`` value removes the field), and the
+        immutable ``(rel path, payload)`` files the new snapshot references.
+        The loop does the rest: stamps ``version`` on the entry, merges
+        ``batch_watermarks``, records ``batch_id`` in the exactly-once
+        applied set, rolls applied/lineage segments, writes every segment
+        BEFORE the snapshot that references it, and installs the snapshot
+        put-if-absent.  On a lost install race it re-reads the latest
+        snapshot and calls ``change`` again — ``change`` must therefore
+        derive everything from ``base``, VALIDATE that its already-executed
+        work still holds and raise ``CommitConflictError`` when it does not
+        (the caller then re-runs the whole operation), or ``_SkipCommit``
+        when the work is already done (duplicate batch id, no-op metadata
+        change).  A loser's files are unreferenced garbage that
+        ``expire_snapshots`` collects.  Returns the stamped entry."""
+        base = read_meta
         for _ in range(_INSTALL_ATTEMPTS):
+            version = base["version"] + 1
             try:
-                new_meta, segments, result = build(meta)
+                entry, fields, segments = change(base, version)
             except _SkipCommit as s:
                 return s.result
+            entry = {**entry, "version": version}
+            watermarks = dict(base["watermarks"])
+            for b, lsn in (batch_watermarks or {}).items():
+                watermarks[str(b)] = max(watermarks.get(str(b), -1), int(lsn))
+            applied = base["applied"]
+            if batch_id is not None:
+                applied = self._roll_applied(
+                    {
+                        **applied,
+                        "count": applied["count"] + 1,
+                        "tail": applied["tail"] + [batch_id],
+                        "bloom": _bloom_add(applied["bloom"], batch_id),
+                    },
+                    segments,
+                )
+            lineage, lineage_segs = self._roll_lineage(
+                base["lineage"] + [entry], base["lineage_segments"], segments
+            )
+            meta = {
+                **base,
+                "version": version,
+                "watermarks": watermarks,
+                "applied": applied,
+                "lineage": lineage,
+                "lineage_segments": lineage_segs,
+            }
+            for k, v in fields.items():
+                if v is None:
+                    meta.pop(k, None)
+                else:
+                    meta[k] = v
             for rel, payload in segments:
-                self._write_json_atomic(rel, payload)
-            if self._try_install_snapshot(new_meta):
-                return result
-            meta = self.metadata()
+                _replace_json(os.path.join(self.root, rel), payload)
+            if self._try_install_snapshot(meta):
+                return entry
+            base = self.metadata()
         raise CommitConflictError(
             f"lost the snapshot install race {_INSTALL_ATTEMPTS} times at "
             f"{self.root!r} — sustained concurrent write pressure"
@@ -743,14 +823,12 @@ class LakeTable:
         files turns dirty.  ``replace`` overrides snapshot fields after the
         bookkeeping advance (rebucket's layout)."""
 
-        def build(base: dict):
+        def change(base: dict, version: int):
             if base is not read_meta:
                 if read_set is None:
                     raise CommitConflictError("table changed during a whole-table rewrite")
                 rs = read_set() if callable(read_set) else read_set
                 self._validate_base(read_meta, base, rs, batch_id)
-            version = base["version"] + 1
-            e = {**entry, "version": version}
             manifest_rel = f"metadata/m-{version}-{_uid()}.json"
             kept = self._bucket_files(base, buckets) if append else carry or {}
             bucket_map = dict(base["buckets"])
@@ -771,17 +849,10 @@ class LakeTable:
                     bucket_map[str(b)] = manifest_rel
                 else:
                     bucket_map.pop(str(b), None)
-            segments: List[Tuple[str, dict]] = []
-            if manifest:
-                segments.append((manifest_rel, {"buckets": manifest}))
-            new_meta = self._advance_meta(
-                base, version, e, bucket_map, segments,
-                batch_watermarks, batch_id, dirty=dirty,
-            )
-            new_meta.update(replace or {})
-            return new_meta, segments, e
+            segments = [(manifest_rel, {"buckets": manifest})] if manifest else []
+            return entry, {"buckets": bucket_map, "dirty": dirty, **(replace or {})}, segments
 
-        return self._commit_loop(read_meta, build)
+        return self._commit(read_meta, change, batch_id, batch_watermarks)
 
     def _read_manifest(self, rel: str) -> dict:
         cached = self._manifest_cache.get(rel)
@@ -856,26 +927,10 @@ class LakeTable:
         bound); newest first."""
         rows = []
         for e in self.lineage():
-            if "schema_evolution" in e:
-                kind = "schema_evolution"
-            elif "rename_column" in e:
-                kind = "rename_column"
-            elif "drop_column" in e:
-                kind = "drop_column"
-            elif "compaction" in e:
-                kind = "compaction"
-            elif "restore" in e:
-                kind = "restore"
-            elif "rebucket" in e:
-                kind = "rebucket"
-            elif "mutation" in e:
-                kind = e["mutation"]  # "delete" / "update"
-            else:
-                kind = "merge"
             rows.append(
                 (
                     int(e.get("version", -1)),
-                    kind,
+                    _entry_kind(e),
                     e.get("batch_id"),
                     float(e["ts"]) if e.get("ts") is not None else None,
                     # 0 is meaningful (a fully-deduplicated merge); NULL
@@ -1047,7 +1102,10 @@ class LakeTable:
         in-flight — one per-key max-by-version aggregation over ONLY the
         dirty buckets; clean buckets stream through scan-only as before.
         ``compact()`` restores a bucket to the scan-only path."""
-        meta = self.metadata(version)
+        return self._read_snapshot(self.metadata(version), buckets)
+
+    def _read_snapshot(self, meta: dict, buckets: Optional[List[int]] = None) -> DataFrame:
+        """``read`` of an already-loaded snapshot."""
         df = self._live_rows(meta, self._bucket_files(meta, buckets), meta["n_buckets"])
         if df is None:
             schema = T.StructType.fromJson(json.loads(meta["schema"]))
@@ -1717,52 +1775,6 @@ class LakeTable:
             ) != bool(rd.get(str(b))):
                 raise CommitConflictError(f"bucket {b} was changed by a concurrent commit")
 
-    def _advance_meta(
-        self,
-        meta: dict,
-        new_version: int,
-        commit: dict,
-        bucket_map: Dict[str, str],
-        new_segments: List[Tuple[str, dict]],
-        batch_watermarks: Optional[Dict[int, int]],
-        batch_id: Optional[str],
-        dirty: Dict[str, bool],
-    ) -> dict:
-        """Pure bookkeeping advance against a base snapshot: watermark
-        merge, exactly-once applied set (tail/bloom/segment rolls), lineage
-        append.  Called once per install attempt — it must derive everything
-        from ``meta`` (the CURRENT base) so a rebase is just a re-call.
-        Rolled segments are appended to ``new_segments`` for the caller to
-        write."""
-        watermarks = dict(meta["watermarks"])
-        for b, lsn in (batch_watermarks or {}).items():
-            watermarks[str(b)] = max(watermarks.get(str(b), -1), int(lsn))
-
-        if batch_id is not None:
-            applied = {
-                **meta["applied"],
-                "count": meta["applied"]["count"] + 1,
-                "tail": meta["applied"]["tail"] + [batch_id],
-                "bloom": _bloom_add(meta["applied"]["bloom"], batch_id),
-            }
-            applied = self._roll_applied(applied, new_segments)
-        else:
-            applied = meta["applied"]
-        lineage_tail, lineage_segs = self._roll_lineage(
-            meta["lineage"] + [commit], meta["lineage_segments"], new_segments
-        )
-
-        return {
-            **meta,
-            "version": new_version,
-            "buckets": bucket_map,
-            "watermarks": watermarks,
-            "applied": applied,
-            "lineage": lineage_tail,
-            "lineage_segments": lineage_segs,
-            "dirty": dirty,
-        }
-
     def _merge_mor(
         self,
         meta: dict,
@@ -1915,7 +1927,7 @@ class LakeTable:
                 F.lit(v).cast(f.dataType)
             ).collect()
 
-        def build(base: dict):
+        def change(base: dict, version: int):
             schema = T.StructType.fromJson(json.loads(base["schema"]))
             existing = {f.name for f in schema.fields}
             added = [f for f in new_fields if f.name not in existing]
@@ -1945,22 +1957,12 @@ class LakeTable:
                 )
             if not added:
                 raise _SkipCommit(None)
-            new_version = base["version"] + 1
-            entry = {
-                "schema_evolution": [f.name for f in added],
-                "note": note,
-                "version": new_version,
-            }
+            entry = {"schema_evolution": [f.name for f in added], "note": note}
             if defaults:
                 entry["defaults"] = {
                     f.name: defaults[f.name] for f in added if f.name in defaults
                 }
-            segments: List[Tuple[str, dict]] = []
-            new_meta = self._advance_meta(
-                base, new_version, entry, dict(base["buckets"]), segments,
-                None, None, dirty=base.get("dirty", {}),
-            )
-            new_meta["schema"] = T.StructType(list(schema.fields) + added).json()
+            fields = {"schema": T.StructType(list(schema.fields) + added).json()}
             # field-id bookkeeping: added columns get FRESH never-reused ids
             # (a re-add after drop_column must NOT resurrect the old files'
             # same-named physical data — see _era_colmap); only materialized
@@ -1986,11 +1988,11 @@ class LakeTable:
                 for f in added:
                     fids[f.name] = next_id
                     next_id += 1
-                new_meta["field_ids"] = fids
-                new_meta["schema_log"] = log + [
-                    [new_version, {str(i): n for n, i in fids.items()}]
+                fields["field_ids"] = fids
+                fields["schema_log"] = log + [
+                    [version, {str(i): n for n, i in fids.items()}]
                 ]
-                new_meta["last_field_id"] = next_id - 1
+                fields["last_field_id"] = next_id - 1
                 # a table with widen history records every era's physical
                 # types: the added columns join the type log NOW so a
                 # LATER widen of one of them still reads the files written
@@ -2000,16 +2002,16 @@ class LakeTable:
                         str(fids[f.name]): f.dataType.json()
                         for f in list(schema.fields) + added
                     }
-                    new_meta["type_log"] = base["type_log"] + [[new_version, tmap]]
+                    fields["type_log"] = base["type_log"] + [[version, tmap]]
                 if defaults:
                     dmap = dict(base.get("column_defaults") or {})
                     for f in added:
                         if f.name in defaults:
                             dmap[str(fids[f.name])] = defaults[f.name]
-                    new_meta["column_defaults"] = dmap
-            return new_meta, segments, entry
+                    fields["column_defaults"] = dmap
+            return entry, fields, []
 
-        self._commit_loop(self.metadata(), build)
+        self._commit(self.metadata(), change)
 
     def rename_column(self, old: str, new: str, note: Optional[str] = None) -> dict:
         """Rename a column WITHOUT rewriting any data file (the Iceberg
@@ -2028,7 +2030,7 @@ class LakeTable:
         if new in (BUCKET_COL, KHASH_COL):
             raise ValueError(f"{new!r} is a reserved internal column name")
 
-        def build(base: dict):
+        def change(base: dict, version: int):
             schema = T.StructType.fromJson(json.loads(base["schema"]))
             names = [f.name for f in schema.fields]
             if old not in names:
@@ -2036,7 +2038,6 @@ class LakeTable:
             if new in names:
                 raise ValueError(f"column {new!r} already exists in {names}")
             fids, log = _field_meta(base)
-            new_version = base["version"] + 1
             fids = {(new if n == old else n): i for n, i in fids.items()}
             new_schema = T.StructType(
                 [
@@ -2044,32 +2045,23 @@ class LakeTable:
                     for f in schema.fields
                 ]
             )
-            entry = {
-                "rename_column": [old, new],
-                "note": note,
-                "version": new_version,
+            entry = {"rename_column": [old, new], "note": note}
+            fields = {
+                "schema": new_schema.json(),
+                "field_ids": fids,
+                "schema_log": log + [[version, {str(i): n for n, i in fids.items()}]],
             }
-            segments: List[Tuple[str, dict]] = []
-            new_meta = self._advance_meta(
-                base, new_version, entry, dict(base["buckets"]), segments,
-                None, None, dirty=base.get("dirty", {}),
-            )
-            new_meta["schema"] = new_schema.json()
-            new_meta["field_ids"] = fids
-            new_meta["schema_log"] = log + [
-                [new_version, {str(i): n for n, i in fids.items()}]
-            ]
             if base.get("stats_cols"):
-                new_meta["stats_cols"] = [
+                fields["stats_cols"] = [
                     new if c == old else c for c in base["stats_cols"]
                 ]
             if base.get("bloom_cols"):
-                new_meta["bloom_cols"] = [
+                fields["bloom_cols"] = [
                     new if c == old else c for c in base["bloom_cols"]
                 ]
-            return new_meta, segments, entry
+            return entry, fields, []
 
-        return self._commit_loop(self.metadata(), build)
+        return self._commit(self.metadata(), change)
 
     def drop_column(self, name: str, note: Optional[str] = None) -> dict:
         """Drop a column WITHOUT rewriting any data file: metadata-only —
@@ -2083,7 +2075,7 @@ class LakeTable:
         if name in KEY_COLS:
             raise ValueError(f"key columns {KEY_COLS} cannot be dropped")
 
-        def build(base: dict):
+        def change(base: dict, version: int):
             schema = T.StructType.fromJson(json.loads(base["schema"]))
             names = [f.name for f in schema.fields]
             if name not in names:
@@ -2091,36 +2083,30 @@ class LakeTable:
             if len(names) <= len(KEY_COLS) + 1:
                 raise ValueError("cannot drop the last non-key column")
             fids, log = _field_meta(base)
-            new_version = base["version"] + 1
             fids = {n: i for n, i in fids.items() if n != name}
             new_schema = T.StructType([f for f in schema.fields if f.name != name])
-            entry = {"drop_column": name, "note": note, "version": new_version}
-            segments: List[Tuple[str, dict]] = []
-            new_meta = self._advance_meta(
-                base, new_version, entry, dict(base["buckets"]), segments,
-                None, None, dirty=base.get("dirty", {}),
-            )
-            new_meta["schema"] = new_schema.json()
-            new_meta["field_ids"] = fids
-            new_meta["schema_log"] = log + [
-                [new_version, {str(i): n for n, i in fids.items()}]
-            ]
+            entry = {"drop_column": name, "note": note}
+            fields = {
+                "schema": new_schema.json(),
+                "field_ids": fids,
+                "schema_log": log + [[version, {str(i): n for n, i in fids.items()}]],
+            }
             if base.get("stats_cols"):
-                new_meta["stats_cols"] = [c for c in base["stats_cols"] if c != name]
+                fields["stats_cols"] = [c for c in base["stats_cols"] if c != name]
             if base.get("bloom_cols"):
-                new_meta["bloom_cols"] = [c for c in base["bloom_cols"] if c != name]
+                fields["bloom_cols"] = [c for c in base["bloom_cols"] if c != name]
             if base.get("column_defaults"):
                 # the default dies with the column (a later same-named
                 # re-add gets a fresh id and starts clean)
                 dropped_id = str(_field_meta(base)[0][name])
-                new_meta["column_defaults"] = {
+                fields["column_defaults"] = {
                     i: v
                     for i, v in base["column_defaults"].items()
                     if i != dropped_id
                 }
-            return new_meta, segments, entry
+            return entry, fields, []
 
-        return self._commit_loop(self.metadata(), build)
+        return self._commit(self.metadata(), change)
 
     def alter_properties(
         self,
@@ -2162,7 +2148,7 @@ class LakeTable:
                     f"user properties are string->string, got {k!r}: {v!r}"
                 )
 
-        def build(base: dict):
+        def change(base: dict, version: int):
             schema = T.StructType.fromJson(json.loads(base["schema"]))
             known = {f.name for f in schema.fields}
             changed: Dict[str, object] = {}
@@ -2193,21 +2179,9 @@ class LakeTable:
                     changed["properties"] = props
             if not changed:
                 raise _SkipCommit(None)
-            new_version = base["version"] + 1
-            entry = {
-                "alter_properties": changed,
-                "note": note,
-                "version": new_version,
-            }
-            segments: List[Tuple[str, dict]] = []
-            new_meta = self._advance_meta(
-                base, new_version, entry, dict(base["buckets"]), segments,
-                None, None, dirty=base.get("dirty", {}),
-            )
-            new_meta.update(changed)
-            return new_meta, segments, entry
+            return {"alter_properties": changed, "note": note}, changed, []
 
-        return self._commit_loop(self.metadata(), build)
+        return self._commit(self.metadata(), change)
 
     def properties(self, meta: Optional[dict] = None) -> Dict[str, str]:
         """Free-form user properties (``alter_properties(set=..., unset=...)``)
@@ -2245,7 +2219,7 @@ class LakeTable:
         if name in KEY_COLS:
             raise ValueError(f"key columns {KEY_COLS} cannot be widened")
 
-        def build(base: dict):
+        def change(base: dict, version: int):
             schema = T.StructType.fromJson(json.loads(base["schema"]))
             by_name = {f.name: f for f in schema.fields}
             if name not in by_name:
@@ -2264,7 +2238,6 @@ class LakeTable:
                     "with non-decreasing scale and integer digits)"
                 )
             fids, log = _field_meta(base)
-            new_version = base["version"] + 1
             new_schema = T.StructType(
                 [
                     T.StructField(
@@ -2278,14 +2251,7 @@ class LakeTable:
             entry = {
                 "widen_column": [name, old.simpleString(), new_type.simpleString()],
                 "note": note,
-                "version": new_version,
             }
-            segments: List[Tuple[str, dict]] = []
-            new_meta = self._advance_meta(
-                base, new_version, entry, dict(base["buckets"]), segments,
-                None, None, dirty=base.get("dirty", {}),
-            )
-            new_meta["schema"] = new_schema.json()
             # era 0 of a fresh type log = the PRE-widen current schema (the
             # physical types of every file written so far, including columns
             # added after create — a column's physical type never changes
@@ -2293,23 +2259,21 @@ class LakeTable:
             tlog = base.get("type_log") or [
                 [0, {str(fids[f.name]): f.dataType.json() for f in schema.fields}]
             ]
-            new_meta["type_log"] = tlog + [
-                [
-                    new_version,
-                    {str(fids[f.name]): f.dataType.json() for f in new_schema.fields},
-                ]
-            ]
-            # materialize field ids so later rename/drop/add eras key the
-            # SAME ids the type log uses (idempotent for already-evolved
-            # tables; positional for legacy ones — consistent either way)
-            new_meta["field_ids"] = fids
-            new_meta["schema_log"] = log
-            new_meta["last_field_id"] = max(
-                int(base.get("last_field_id", -1)), *fids.values()
-            )
-            return new_meta, segments, entry
+            fields = {
+                "schema": new_schema.json(),
+                "type_log": tlog + [
+                    [version, {str(fids[f.name]): f.dataType.json() for f in new_schema.fields}]
+                ],
+                # materialize field ids so later rename/drop/add eras key the
+                # SAME ids the type log uses (idempotent for already-evolved
+                # tables; positional for legacy ones — consistent either way)
+                "field_ids": fids,
+                "schema_log": log,
+                "last_field_id": max(int(base.get("last_field_id", -1)), *fids.values()),
+            }
+            return entry, fields, []
 
-        return self._commit_loop(self.metadata(), build)
+        return self._commit(self.metadata(), change)
 
     def _align_source(self, df: DataFrame, schema: T.StructType) -> DataFrame:
         """Cast source payload columns whose types differ from the table
@@ -2713,22 +2677,16 @@ class LakeTable:
         rebases like any other commit."""
         target = self.metadata(version)  # raises if expired
 
-        def build(base: dict):
-            new_version = base["version"] + 1
-            entry = {
-                "restore": version,
-                "version": new_version,
-                "ts": time.time(),
-            }
+        def change(base: dict, _new_version: int):
+            entry = {"restore": version, "ts": time.time()}
             if note:
                 entry["note"] = note
-            segments: List[Tuple[str, dict]] = []
-            new_meta = self._advance_meta(
-                base, new_version, entry, dict(target["buckets"]), segments,
-                None, None, dirty=dict(target.get("dirty", {})),
-            )
-            new_meta["schema"] = target["schema"]
-            new_meta["n_buckets"] = target["n_buckets"]
+            fields = {
+                "buckets": dict(target["buckets"]),
+                "dirty": dict(target.get("dirty", {})),
+                "schema": target["schema"],
+                "n_buckets": target["n_buckets"],
+            }
             # the schema-evolution metadata must travel WITH the schema: a
             # rename/drop between target and head leaves the current
             # field_ids keyed by names the restored schema doesn't have
@@ -2751,10 +2709,7 @@ class LakeTable:
             # reader's promotion support instead of the era map being right
             for k in ("field_ids", "schema_log", "type_log", "column_defaults",
                       "stats_cols", "bloom_cols"):
-                if target.get(k) is not None:
-                    new_meta[k] = target[k]
-                else:
-                    new_meta.pop(k, None)
+                fields[k] = target.get(k)  # None: the target has none
             hw = max(int(base.get("last_field_id", -1)),
                      int(target.get("last_field_id", -1)))
             t_fids, t_log = _field_meta(target)
@@ -2763,10 +2718,10 @@ class LakeTable:
                 hw = max(hw, _next_field_id(base, b_fids, b_log) - 1)
             if target.get("field_ids") is not None or hw >= 0:
                 hw = max(hw, _next_field_id(target, t_fids, t_log) - 1)
-                new_meta["last_field_id"] = hw
-            return new_meta, segments, entry
+                fields["last_field_id"] = hw
+            return entry, fields, []
 
-        return self._commit_loop(self.metadata(), build)
+        return self._commit(self.metadata(), change)
 
     # -- metadata tables (Iceberg files/snapshots/partitions analogue) ----
 
@@ -2828,28 +2783,10 @@ class LakeTable:
         for v in sorted(metas):
             meta = self.metadata(v)
             e = by_version.get(v, {})
-            if "schema_evolution" in e:
-                kind = "schema_evolution"
-            elif "rename_column" in e:
-                kind = "rename_column"
-            elif "drop_column" in e:
-                kind = "drop_column"
-            elif "compaction" in e:
-                kind = "compaction"
-            elif "restore" in e:
-                kind = "restore"
-            elif "rebucket" in e:
-                kind = "rebucket"
-            elif "mutation" in e:
-                kind = e["mutation"]
-            elif v == 0:
-                kind = "create"
-            else:
-                kind = "merge"
             rows.append(
                 (
                     v,
-                    kind,
+                    "create" if v == 0 and not e else _entry_kind(e),
                     e.get("batch_id"),
                     float(e["ts"]) if "ts" in e else None,
                     meta["n_buckets"],
@@ -2900,16 +2837,8 @@ class LakeTable:
             raise FileNotFoundError(f"no snapshot v{v} on ref {self.ref!r}")
         os.makedirs(self._tags_dir(), exist_ok=True)
         tag = {"name": name, "ref": self.ref, "version": v, "created_at": time.time()}
-        path = os.path.join(self._tags_dir(), f"{name}.json")
-        tmp = path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(tag, fh)
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
+        if not _put_json_if_absent(os.path.join(self._tags_dir(), f"{name}.json"), tag):
             raise FileExistsError(f"tag {name!r} already exists")
-        finally:
-            os.unlink(tmp)
         return tag
 
     def tag_version(self, name: str) -> int:
@@ -3271,8 +3200,12 @@ class LakeTable:
         table size.  Compaction/expiry between the versions changes pointers
         but not state; those buckets join to an empty diff (read cost only,
         never false rows)."""
-        meta_to = self.metadata(to_version)
-        meta_from = self.metadata(from_version)
+        return self._changes(
+            self.metadata(from_version), self.metadata(to_version), include_before
+        )
+
+    def _changes(self, meta_from: dict, meta_to: dict, include_before: bool) -> DataFrame:
+        """``changes`` between two already-loaded snapshots."""
         if meta_from["version"] > meta_to["version"]:
             raise ValueError(
                 f"from_version {meta_from['version']} is newer than to_version {meta_to['version']}"
@@ -3291,7 +3224,7 @@ class LakeTable:
             # columns dropped inside the window leave the diff entirely
             fids_v, _ = _field_meta(meta_v)
             by_id = {i: n for n, i in fids_v.items()}
-            df = self.read(version=meta_v["version"], buckets=buckets).drop(BUCKET_COL)
+            df = self._read_snapshot(meta_v, buckets).drop(BUCKET_COL)
             sel = []
             for f in schema.fields:
                 src = by_id.get(fids_to[f.name])

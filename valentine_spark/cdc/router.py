@@ -278,7 +278,6 @@ def replay_routed(
     batch_id_prefix: str = "wal",
     json_col: str = "value",
     parallelism: int = 1,
-    cache_streams: bool = True,
     decoder=None,
     skip_empty: bool = True,
     return_routed: bool = False,
@@ -302,16 +301,14 @@ def replay_routed(
     boundaries) converges to LSN order, not timestamp order — the
     router fuzz (tests/test_router_fuzz.py) pins this contract.
 
-    ``cache_streams`` (default on) persists each table's DECODED canonical
-    stream for the duration of the replay: the per-slice LSN filter cannot
-    push below ``from_json``, so without the cache every slice re-reads
-    and re-parses the table's whole raw slice — an S-slice replay would
-    pay ~S+1 full parse passes (plus ~2 internal scans per apply).  With
-    it, the parse runs once per table (the occupied-slice job materializes
-    the cache) and all slice scans are cache hits.  Turn off only when the
-    decoded stream is far larger than cluster storage memory — the cache
-    spills to executor disk before failing, so that trade is throughput,
-    not stability.
+    Each table's DECODED canonical stream is persisted for the duration of
+    the replay (MEMORY_AND_DISK, so an oversized stream spills to executor
+    disk instead of failing): the per-slice LSN filter cannot push below
+    ``from_json``, so without the cache every slice would re-read and
+    re-parse the table's whole raw slice — an S-slice replay would pay
+    ~S+1 full parse passes (plus ~2 internal scans per apply).  With it,
+    the parse runs once per table (the occupied-slice job materializes the
+    cache) and all slice scans are cache hits.
 
     Only OCCUPIED slices are walked: one small per-table aggregation
     (``floor(lsn / batch_lsns)`` -> per-slice max) replaces the old min/max
@@ -343,12 +340,10 @@ def replay_routed(
             f"replay_routed: batch_lsns must be positive, got {batch_lsns}"
         )
     routed = (decoder or decode_maxwell_routed)(raw, schemas, json_col=json_col)
-    streams = routed.streams
-    if cache_streams:
-        streams = {
-            name: df.persist(StorageLevel.MEMORY_AND_DISK)
-            for name, df in streams.items()
-        }
+    streams = {
+        name: df.persist(StorageLevel.MEMORY_AND_DISK)
+        for name, df in routed.streams.items()
+    }
     try:
         # one driver-sized agg per table: occupied slice key -> max lsn
         # (rows = occupied slices, never events); also materializes the
@@ -387,6 +382,5 @@ def replay_routed(
             )
         return (out, routed) if return_routed else out
     finally:
-        if cache_streams:
-            for df in streams.values():
-                df.unpersist()
+        for df in streams.values():
+            df.unpersist()
